@@ -538,7 +538,7 @@ object SparkEntry {
     // subdomains on doc_id % 7) so suffix matching actually fires; the
     // blocklist literal carries an overlapping cdn.src2/src2 pair, so
     // most-specific-wins is exercised on real rows. Plan: zero corpus
-    // exchanges — one broadcast LEFT join per suffix level (PlanCheck).
+    // exchanges — one broadcast LEFT join per suffix level (PlanShapeSpec).
     "d45_blocklist" -> ((s, d) => {
       import s.implicits._
       val rawHost = when(col("doc_id") % 7 === 0,

@@ -35,37 +35,13 @@ object Charset {
       case Some(cs) => return Decision(cs, declared = false)
       case None     =>
     }
-    // ASCII-lowercased prefix is safe for both candidate charsets
-    val sb = new java.lang.StringBuilder(n)
-    var i = 0
-    while (i < n) {
-      val b = html(i)
-      sb.append((if (b >= 'A' && b <= 'Z') (b + 32) else (b & 0xff)).toChar)
-      i += 1
-    }
-    val head = sb.toString
-    val key = "charset="
-    // honor charset= ONLY inside a <meta ...> tag (the HTML meta prescan):
-    // the bare substring search let a URL query string, comment, or code
-    // sample in the first 2 KB ('<a href="/x?charset=big5">') hijack the
-    // page decoding and mojibake every non-ASCII run
-    var at = head.indexOf(key)
-    while (at >= 0 && {
-      val lt = head.lastIndexOf('<', at)
-      val inMeta = lt >= 0 && head.regionMatches(lt, "<meta", 0, 5) &&
-        lt + 5 < head.length &&
-        (Character.isWhitespace(head.charAt(lt + 5)) || head.charAt(lt + 5) == '/') && {
-          val gt = head.indexOf('>', lt)
-          gt < 0 || gt > at
-        }
-      !inMeta
-    }) at = head.indexOf(key, at + 1)
+    val at = metaCharsetAt(html, n)
     if (at >= 0) {
-      var s = at + key.length
-      while (s < head.length && (head.charAt(s) == '"' || head.charAt(s) == '\'' || head.charAt(s) == ' ')) s += 1
+      var s = at
+      while (s < n && { val c = lower(html(s)); c == '"' || c == '\'' || c == ' ' }) s += 1
       var e = s
-      while (e < head.length && (head.charAt(e).isLetterOrDigit || head.charAt(e) == '-' || head.charAt(e) == '_')) e += 1
-      val name = head.substring(s, e)
+      while (e < n && { val c = lower(html(e)); c.isLetterOrDigit || c == '-' || c == '_' }) e += 1
+      val name = new String(html, s, e - s, StandardCharsets.ISO_8859_1).toLowerCase(java.util.Locale.ROOT)
       val cs = name match {
         case "utf-8" | "utf8"                       => StandardCharsets.UTF_8
         case "windows-1252" | "cp1252" | "iso-8859-1" => win1252
@@ -75,6 +51,54 @@ object Charset {
       }
       Decision(cs, declared = true)
     } else Decision(StandardCharsets.UTF_8, declared = false)
+  }
+
+  /** ASCII-lowercased byte; safe for both candidate charsets of the prefix. */
+  private def lower(b: Byte): Char = (if (b >= 'A' && b <= 'Z') b + 32 else b & 0xff).toChar
+
+  /** Case-insensitive ASCII match of `lit` (lower case) at `html[i]`, within `n`. */
+  private def matchesAt(html: Array[Byte], n: Int, i: Int, lit: String): Boolean =
+    i + lit.length <= n && {
+      var k = 0
+      while (k < lit.length && lower(html(i + k)) == lit.charAt(k)) k += 1
+      k == lit.length
+    }
+
+  /** The HTML meta prescan over `html[0, n)`, in one pass: the index just
+    * past the first `charset=` inside a `<meta ...>` tag, or -1. Only a meta
+    * tag declares — a URL query string or code sample elsewhere in the
+    * prefix (`<a href="/x?charset=big5">`) must not hijack the decoding.
+    * `<!-- -->` comments are skipped, so a commented-out meta declares
+    * nothing, and every tag ends at its first `>` outside a quoted attribute
+    * value, so a `>` in an earlier value (`content="x>y; charset=..."`)
+    * neither ends a meta early nor opens a fake tag. A tag with no end in
+    * the prefix runs to `n`. */
+  private def metaCharsetAt(html: Array[Byte], n: Int): Int = {
+    var i = 0
+    while (i < n) {
+      if (html(i) != '<') i += 1
+      else if (matchesAt(html, n, i, "<!--")) {
+        i += 4
+        while (i < n && !matchesAt(html, n, i, "-->")) i += 1
+        i += 3
+      } else if (i + 1 < n && lower(html(i + 1)) >= 'a' && lower(html(i + 1)) <= 'z') {
+        val isMeta = matchesAt(html, n, i, "<meta") && i + 5 < n &&
+          (Character.isWhitespace(lower(html(i + 5))) || html(i + 5) == '/')
+        var j = i + 1
+        var quote = 0 // the open quote byte, 0 outside a quoted value
+        var prev = 0 // last non-space byte: a quote opens a value only after '='
+        while (j < n && (quote != 0 || html(j) != '>')) {
+          val c = html(j)
+          if (quote != 0) { if (c == quote) quote = 0 }
+          else if ((c == '"' || c == '\'') && prev == '=') quote = c
+          if (isMeta && matchesAt(html, n, j, "charset=")) return j + 8
+          if (!Character.isWhitespace(lower(c))) prev = c
+          j += 1
+        }
+        i = j + 1
+      } else i += 1
+    }
+    -1
   }
 
   /** Decode bytes [from, until) with `cs`; malformed sequences are replaced,

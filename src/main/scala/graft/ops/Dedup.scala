@@ -81,7 +81,7 @@ object Dedup {
     * cache entries; caller may `unpersist()` the (small) result.
     *
     * `materialize = false` returns the UNEXECUTED plan for explain/audit
-    * ONLY (PlanCheck): its upstream persist() markers (the signature cache)
+    * ONLY (PlanShapeSpec): its upstream persist() markers (the signature cache)
     * have no owner on that path, so EXECUTING the returned plan would build
     * a corpus-sized cache nothing ever releases — audit the plan, then call
     * again with materialize = true to actually compute. */

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.model.{ExtractedPage, Page}
 import graft.Extractor
@@ -18,13 +18,11 @@ import graft.Extractor
   *     hold several multi-MB pages (the reference's dynamic batching /
   *     oversize clamping analogue,
   *     /root/reference/src/core/batch/dynamic/processor.rs:432-511);
-  *   - per-row failures degrade to error rows
-  *     (/root/reference/src/oarocr/ocr.rs:510-523), counted via accumulators.
+  *   - per-row failures degrade to error rows (the reference's
+  *     src/oarocr/ocr.rs:510-523); this job counts nothing, ExtractMain.run
+  *     counts rows, errors, bytes and chars per unit.
   */
 object ExtractJob {
-
-  /** Number of url buckets used for output partitioning + resume lineage. */
-  val UrlBuckets = 64
 
   def run(pages: Dataset[Page], salt: Int = 0, sizeSort: Boolean = false): Dataset[ExtractedPage] = {
     val spark = pages.sparkSession
@@ -48,10 +46,11 @@ object ExtractJob {
     val batched =
       if (sizeSort) input.sortWithinPartitions(length(col("html")))
       else input
-    // no per-row accumulators here: nothing read them, they cost atomic
-    // adds on the hot path, and multi-action consumers would double-count
-    // — ExtractMain's UnitStatsAcc (audited, surfaced in lineage) is the
-    // one metrics channel
+    // no per-row accumulators here: they cost atomic adds on the hot path
+    // and multi-action consumers would double-count. Lineage is counted once,
+    // in ExtractMain.run: a UnitStatsAcc on the scratch-write job, audited
+    // against the parquet footer row count, with readbackStats as the
+    // fallback; the counts land in each unit's TableIO.UnitManifest
     batched.mapPartitions(_.map(Extractor.extract))
   }
 
@@ -108,125 +107,5 @@ object ExtractJob {
       .repartition(total, col("__p"))
       .drop("__p")
       .as[Page], salt = 0, sizeSort = true)
-  }
-
-  /** Output projection for writing: drops nothing we need, keeps columns
-    * primitive; partition layout per the north rule (crawl date + url
-    * bucket). */
-  def toOutput(extracted: Dataset[ExtractedPage]) = {
-    extracted
-      .withColumn("crawl_date", to_date(col("warc_ts")))
-      .withColumn("url_bucket", pmod(xxhash64(col("url")), lit(UrlBuckets)).cast("int"))
-  }
-}
-
-/** Smoke main: fixture corpus through the full Spark pipeline on local[*];
-  * prints extraction stats. `runMain graft.spark.ExtractDemo [nRows]`. */
-object ExtractDemo {
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.flatMap(_.toIntOption).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-extract-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    // distributed deterministic generation: rowIds parallelized, pages built
-    // inside executors (no driver-side corpus materialization)
-    val ts = new java.sql.Timestamp(0L)
-    val pages: Dataset[Page] =
-      if (args.contains("--probe")) {
-        // adversarial rows: empty, null html, garbage bytes, truncated PDF,
-        // html-less text, deep nesting, only boilerplate
-        val probes = Seq(
-          Page("probe://empty", ts, Array.emptyByteArray, "", "en"),
-          Page("probe://null", ts, null, "", "en"),
-          Page("probe://garbage", ts, Array.tabulate(4096)(i => (i * 31 % 251).toByte), "", "en"),
-          Page("probe://pdf-truncated", ts, "%PDF-GRAFT 1\nP 600".getBytes, "", "en"),
-          Page("probe://pdf-empty", ts, "%PDF".getBytes, "", "en"),
-          // real-PDF adversarial rows: all must be ERROR rows, never silent
-          // empty text (the round-2 verdict's top honesty ask)
-          Page("probe://realpdf-truncated", ts, "%PDF-1.4\n1 0 obj\n<< /Type /Cat".getBytes, "", "en"),
-          Page("probe://realpdf-no-text", ts,
-            ("%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
-              "2 0 obj\n<< /Type /Pages /Count 1 /Kids [3 0 R] >>\nendobj\n" +
-              "3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>\nendobj\n" +
-              "4 0 obj\n<< /Length 20 /Filter /DCTDecode >>\nstream\nÿØimagebytesimage\nendstream\nendobj\n" +
-              "trailer\n<< /Root 1 0 R >>\n%%EOF\n").getBytes(java.nio.charset.StandardCharsets.ISO_8859_1), "", "en"),
-          // Type0/CID font without /ToUnicode: glyph indices are undecodable —
-          // must be an ERROR row, never silently-wrong mojibake text
-          Page("probe://realpdf-cid-no-tounicode", ts,
-            ("%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
-              "2 0 obj\n<< /Type /Pages /Count 1 /Kids [3 0 R] >>\nendobj\n" +
-              "3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>\nendobj\n" +
-              "4 0 obj\n<< /Length 52 >>\nstream\nBT /F1 12 Tf 1 0 0 1 50 700 Tm <00480069> Tj ET\nendstream\nendobj\n" +
-              "5 0 obj\n<< /Type /Font /Subtype /Type0 /Encoding /Identity-H >>\nendobj\n" +
-              "trailer\n<< /Root 1 0 R >>\n%%EOF\n").getBytes(java.nio.charset.StandardCharsets.ISO_8859_1), "", "en"),
-          // round 5 hardening rows: /Encrypt, oversize payload, adversarial
-          // resync bytes — all must be clean ERROR rows within bounded time
-          Page("probe://realpdf-encrypted", ts,
-            ("%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
-              "2 0 obj\n<< /Type /Pages /Count 1 /Kids [3 0 R] >>\nendobj\n" +
-              "3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>\nendobj\n" +
-              "4 0 obj\n<< /Length 10 >>\nstream\nciphertext\nendstream\nendobj\n" +
-              "trailer\n<< /Root 1 0 R /Encrypt 9 0 R >>\n%%EOF\n")
-              .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1), "", "en"),
-          // cap+1 payload: ~64 MB rides the probe's LocalRelation — a real
-          // allocation because the cap check is length-based and must be hit
-          // end-to-end. Probe mode only (diagnostic main); never in the job
-          // path, and local-mode tasks share the driver heap, so no RPC-size
-          // exposure here.
-          Page("probe://realpdf-oversize", ts, {
-            val b = new Array[Byte](graft.Extractor.MaxPdfBytes + 1)
-            System.arraycopy("%PDF-1.4\n".getBytes, 0, b, 0, 9)
-            b
-          }, "", "en"),
-          Page("probe://realpdf-pathological", ts, {
-            val sb = new java.lang.StringBuilder("%PDF-1.4\n")
-            for (_ <- 0 until 5000) sb.append("1 0 obj (").append("x" * 100).append("\n")
-            sb.toString.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-          }, "", "en"),
-          Page("probe://boilerplate-only", ts,
-            "<nav><a href='/'>x</a></nav><footer>y</footer>".getBytes, "", "en"),
-          Page("probe://deep-nesting", ts,
-            ("<div>" * 5000 + "<p>deep nested content words here</p>" + "</div>" * 5000).getBytes, "", "en"),
-          Page("probe://tag-soup", ts,
-            "<p><table border=1><tr><td>a</p></div><td>b<tr></table></b><p>tail words appear here fine</p>".getBytes, "", "en"),
-          Page("probe://huge-tag", ts, ("<p " + "x" * 100000 + ">words in a giant tag here</p>").getBytes, "", "en")
-        )
-        spark.createDataset(probes)
-      } else spark.range(n).as[Long]
-        .mapPartitions(_.map(i => graft.fixtures.FixtureGen.fixture(i).page))
-
-    val t0 = System.nanoTime()
-    val out =
-      if (args.contains("--bucketed")) ExtractJob.runBucketed(pages)
-      else ExtractJob.run(pages, salt = 16, sizeSort = args.contains("--sort"))
-    val agg = out.agg(
-      count(lit(1)).as("rows"),
-      sum(when(col("error") =!= "", 1).otherwise(0)).as("errors"),
-      sum("htmlBytes").as("html_bytes"),
-      sum(length(col("text"))).as("text_chars"),
-      sum(size(col("spans"))).as("spans"),
-      sum(when(col("isPdf"), 1).otherwise(0)).as("pdf_pages"),
-      sum("nKept").as("kept_blocks"),
-      sum("nBlocks").as("all_blocks")
-    ).collect()(0)
-    val secs = (System.nanoTime() - t0) / 1e9
-    println(f"rows=${agg.getLong(0)} errors=${agg.getLong(1)} htmlMB=${agg.getLong(2) / 1e6}%.1f " +
-      s"textChars=${agg.getLong(3)} spans=${agg.getLong(4)} pdf=${agg.getLong(5)} " +
-      s"kept=${agg.getLong(6)}/${agg.getLong(7)} secs=$secs " +
-      // actual row count, not the requested n — probe mode runs ~15 rows
-      s"pages_per_sec=${agg.getLong(0) / secs}")
-    // sample rows through the full encoder round-trip
-    val k = if (args.contains("--probe")) 20 else 1
-    for (sample <- out.orderBy(col("url")).limit(k).collect())
-      println(s"sample url=${sample.url} err='${sample.error}' nKept=${sample.nKept} " +
-        s"textHead=${sample.text.take(100).replace("\n", "\\n")}")
-    spark.stop()
   }
 }

@@ -199,6 +199,11 @@ object ExtractMain {
     // and the write would silently inflate rows/ok/err/bytes/chars. The
     // written row count is free from parquet footers; on mismatch fall back
     // to an exact readback aggregation over scratch (the pre-r4 path).
+    // Measured alternative, rejected: readbackStats alone (no accumulator, no
+    // audit) made the write job faster (no Row round-trip, 2.85 s -> 2.46 s)
+    // but the readback cost more than the footer count it replaced (0.81 s ->
+    // 1.01 s): perfbench crawl_mix median wall_s +5.0 % (3.83 -> 4.03 s),
+    // worse in 6 of 6 alternating pairs, 4-core VM.
     val accStats = acc.value
     val accRows = accStats.valuesIterator.map(_(0)).sum
     // explicit schema: a zero-row write leaves only _SUCCESS in scratch and

@@ -336,6 +336,25 @@ class KernelSpec extends AnyFunSuite {
     assert(d3.declared && d3.charset == UTF_8, d3.toString)
   }
 
+  test("charset: a quoted '>' in a meta attribute value does not end the tag") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val quoted = ("<html><head><meta http-equiv=\"Content-Type\" " +
+      "content=\"x>y; charset=windows-1252\"></head><body><p>café</p>").getBytes(UTF_8)
+    val d = Charset.sniff(quoted)
+    assert(d.declared && d.charset.name.toLowerCase.contains("1252"), d.toString)
+  }
+
+  test("charset: a commented-out meta declares nothing") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val commented = "<html><head><!-- <meta charset=big5> --><title>t</title></head>".getBytes(UTF_8)
+    val d = Charset.sniff(commented)
+    assert(d.charset == UTF_8 && !d.declared, d.toString)
+    // the real declaration after the comment still wins
+    val after = "<!-- <meta charset=big5> --><meta charset=\"windows-1252\">".getBytes(UTF_8)
+    val d2 = Charset.sniff(after)
+    assert(d2.declared && d2.charset.name.toLowerCase.contains("1252"), d2.toString)
+  }
+
   test("tables: nested-table text flattens into the enclosing cell") {
     val html = "<table border='1'><tr><td>outer<table><tr><td>inner one</td>" +
       "<td>inner two</td></tr></table></td><td>plain</td></tr></table>"
