@@ -94,55 +94,41 @@ object Extractor {
     }
   }
 
-  /** The same MaxHtmlBytes clamp extract() applies — the debug surfaces
-    * below must describe what production EMITS (and stay bounded on
-    * oversized pages), not re-parse the unclamped bytes. */
-  private def clampedHtml(p: Page): Array[Byte] = {
+  /** The shared prologue of the debug surfaces below: extract()'s
+    * MaxHtmlBytes clamp (they must describe what production EMITS, and stay
+    * bounded on oversized pages), the PDF sniff, charset normalization and
+    * block building. `f` sees the raw blocks of a non-PDF page; PDFs and any
+    * failure yield None. */
+  private def debugHtml[A](p: Page)(f: Vector[BlockBuilder.RawBlock] => A): Option[A] = {
     val raw = if (p.html == null) Array.emptyByteArray else p.html
-    if (!PdfParser.isPdf(raw) && raw.length > MaxHtmlBytes)
-      java.util.Arrays.copyOf(raw, MaxHtmlBytes)
-    else raw
-  }
-
-  /** Debug surface: classified blocks of a non-PDF page (empty for PDFs /
-    * failures). Used by the driver-facing x03/x06 inventory queries. */
-  def debugBlocks(p: Page): Vector[graft.model.Block] = {
-    val raw = clampedHtml(p)
-    try {
-      if (PdfParser.isPdf(raw)) Vector.empty
-      else {
-        val (html, cs, _) = pipelineInput(raw)
-        Classifier.classify(BlockBuilder.build(html, cs))
-      }
-    } catch { case _: Throwable => Vector.empty }
-  }
-
-  /** Alternate output renders (semantic HTML + JSON with span coordinates)
-    * for a non-PDF page — the reference's to_html / to_json surfaces. */
-  def renders(p: Page): Option[(String, String)] = {
-    val raw = clampedHtml(p)
     try {
       if (PdfParser.isPdf(raw)) None
       else {
-        val (html, cs, _) = pipelineInput(raw)
-        val raws = BlockBuilder.build(html, cs)
-        val blocks = Classifier.classify(raws)
-        Some((Assembler.renderHtml(blocks), Assembler.renderJson(blocks, Assembler.spans(raws, blocks))))
+        val clamped =
+          if (raw.length > MaxHtmlBytes) java.util.Arrays.copyOf(raw, MaxHtmlBytes)
+          else raw
+        val (html, cs, _) = pipelineInput(clamped)
+        Some(f(BlockBuilder.build(html, cs)))
       }
     } catch { case _: Throwable => None }
   }
 
+  /** Debug surface: classified blocks of a non-PDF page (empty for PDFs /
+    * failures). Used by the driver-facing x03/x06 inventory queries. */
+  def debugBlocks(p: Page): Vector[graft.model.Block] =
+    debugHtml(p)(Classifier.classify(_)).getOrElse(Vector.empty)
+
+  /** Alternate output renders (semantic HTML + JSON with span coordinates)
+    * for a non-PDF page — the reference's to_html / to_json surfaces. */
+  def renders(p: Page): Option[(String, String)] =
+    debugHtml(p) { raws =>
+      val blocks = Classifier.classify(raws)
+      (Assembler.renderHtml(blocks), Assembler.renderJson(blocks, Assembler.spans(raws, blocks)))
+    }
+
   /** Debug surface: captured data tables as (blockIdx, nCells, canonicalHtml). */
-  def debugTables(p: Page): Vector[(Int, Int, String)] = {
-    val raw = clampedHtml(p)
-    try {
-      if (PdfParser.isPdf(raw)) Vector.empty
-      else {
-        val (html, cs, _) = pipelineInput(raw)
-        BlockBuilder.build(html, cs).zipWithIndex.collect {
-          case (b, i) if b.kind == "table" => (i, b.cellRuns.length, b.text)
-        }
-      }
-    } catch { case _: Throwable => Vector.empty }
-  }
+  def debugTables(p: Page): Vector[(Int, Int, String)] =
+    debugHtml(p)(_.zipWithIndex.collect {
+      case (b, i) if b.kind == "table" => (i, b.cellRuns.length, b.text)
+    }).getOrElse(Vector.empty)
 }

@@ -266,8 +266,10 @@ object SparkEntry {
         .map { case (id, t) => (id, Dedup.simhash(t)) }
         .toDF("doc_id", "simhash_sig")
       val pairs = Dedup.simhashPairs(s, docs(s, d), maxHamming = 3)
-      val perDoc = pairs.select(col("doc_a").as("doc_id"))
-        .union(pairs.select(col("doc_b").as("doc_id")))
+      // both ends of a pair from ONE reference: a self-union of the lazy
+      // `pairs` would plan (and run) the banded flatMapGroups subtree twice
+      // (PlanShapeSpec counts one MapGroups). Same (doc_id) row multiset.
+      val perDoc = pairs.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
         .groupBy("doc_id").agg(count(lit(1)).as("n_neardups"))
       sigs.join(perDoc, Seq("doc_id"), "left")
         .select(col("doc_id"), col("simhash_sig"),
@@ -639,10 +641,10 @@ object SparkEntry {
     }),
     "x13_stream_extract" -> ((s, d) => {
       // the streaming surface through the driver gate: a bounded MemoryStream
-      // runs the SAME kernel via extractStream into a memory sink; results
-      // must match the batch extraction bytes. The stream carries ROW IDS
-      // only — pages are generated inside the stream map on executors, so the
-      // task binary stays small (the page-valued stream shipped ~8.6 MiB of
+      // runs the SAME ExtractJob.run into a memory sink; results must match
+      // the batch extraction bytes. The stream carries ROW IDS only — pages
+      // are generated inside the stream map on executors, so the task binary
+      // stays small (the page-valued stream shipped ~8.6 MiB of
       // corpus in every task binary).
       import s.implicits._
       implicit val sq: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -652,7 +654,7 @@ object SparkEntry {
       stream.addData(0L until n)
       val sink = "x13_sink_" + x13Counter.incrementAndGet()
       val pages = stream.toDS().map(i => fixtures.FixtureGen.fixture(i).page)
-      val q = graft.streaming.StreamExtract.extractStream(pages)
+      val q = ExtractJob.run(pages)
         .select(col("url"), length(col("text")).as("text_len"),
           sha2(to_binary(col("text"), lit("utf-8")), 256).as("text_sha256"))
         .writeStream.format("memory").queryName(sink)
@@ -675,7 +677,7 @@ object SparkEntry {
       val sink = "x14_sink_" + x13Counter.incrementAndGet()
       val pages = stream.toDS().map(i => fixtures.FixtureGen.fixture(i).page)
       val q = graft.streaming.StreamExtract
-        .dedupStream(graft.streaming.StreamExtract.extractStream(pages))
+        .dedupStream(ExtractJob.run(pages))
         .select(col("url"), length(col("text")).as("text_len"))
         .writeStream.format("memory").queryName(sink)
         .outputMode("append").start()

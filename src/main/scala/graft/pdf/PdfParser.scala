@@ -308,9 +308,14 @@ object PdfParser {
       // footnotes, dense tables) has real lines closer than 10, which a
       // flat tolerance would merge and interleave by x. Scale the tolerance
       // down with the glyph height (same-line fragments sit within a
-      // fraction of their own height), capped at the reference's 10.
-      val tol = math.min(SameLineYTol,
-        0.8 * math.min(if (anchorH > 0) anchorH else tb.box.h, tb.box.h))
+      // fraction of their own height), capped at the reference's 10. With
+      // both heights 0 (a producer that emits no glyph extent) there is
+      // nothing to scale by: keep the flat tolerance, or the 0.01 floor would
+      // put every sub-pixel-jittered fragment on its own line.
+      val tol =
+        if (anchorH <= 0 && tb.box.h <= 0) SameLineYTol
+        else math.min(SameLineYTol,
+          0.8 * math.min(if (anchorH > 0) anchorH else tb.box.h, tb.box.h))
       if (anchor.isNaN || math.abs(tb.box.cy - anchor) < math.max(tol, 0.01)) {
         if (anchor.isNaN) { anchor = tb.box.cy; anchorH = tb.box.h }
         cur += tb

@@ -11,7 +11,7 @@ import graft.model.Page
   * spark-submit --class graft.spark.ExtractMain graft.jar \
   *   --in  <parquet dir of Page rows | fixture:<nRows>> \
   *   --out <output table root> \
-  *   [--units 64] [--group-size 8] [--salt 0] [--size-sort] [--fail-after-groups -1]
+  *   [--units 64] [--group-size 8] [--fail-after-groups -1]
   * }}}
   *
   * Execution model (scale design for 10^12 rows):
@@ -26,9 +26,10 @@ import graft.model.Page
   *     against lineage — here a set difference because the manifest set is
   *     tiny and driver-side; at 10^12 scale with millions of units it becomes
   *     `pending.join(lineage, "unit", "left_anti")` as in SURVEY.md §4);
-  *   - `html` never crosses a shuffle: the only wide exchange is the optional
-  *     skew salt inside ExtractJob.run, and the scratch write partitions by a
-  *     column computed in the same stage as the extraction.
+  *   - there is no wide exchange, so `html` never crosses a shuffle:
+  *     ExtractJob.run is one narrow map over the scan, and the scratch write
+  *     partitions by a column computed in the same stage as the extraction
+  *     (PlanShapeSpec asserts both plans have no Exchange).
   *
   * `--fail-after-groups k` injects a crash after k committed groups — the
   * resume test drives it (ResumeSpec).
@@ -40,8 +41,6 @@ object ExtractMain {
       out: String = "",
       units: Int = 64,
       groupSize: Int = 8,
-      salt: Int = 0,
-      sizeSort: Boolean = false,
       failAfterGroups: Int = -1,
       master: Option[String] = None)
 
@@ -54,8 +53,6 @@ object ExtractMain {
         case "--out" => a = a.copy(out = argv(i + 1)); i += 2
         case "--units" => a = a.copy(units = argv(i + 1).toInt); i += 2
         case "--group-size" => a = a.copy(groupSize = argv(i + 1).toInt); i += 2
-        case "--salt" => a = a.copy(salt = argv(i + 1).toInt); i += 2
-        case "--size-sort" => a = a.copy(sizeSort = true); i += 1
         case "--fail-after-groups" => a = a.copy(failAfterGroups = argv(i + 1).toInt); i += 2
         case "--master" => a = a.copy(master = Some(argv(i + 1))); i += 2
         case other => throw new IllegalArgumentException(s"unknown arg $other")
@@ -157,7 +154,7 @@ object ExtractMain {
     val slice =
       if (committed.isEmpty) pages // fresh run: no filter at all
       else pages.filter(unitOf.isin(pending: _*)).as[Page]
-    val extracted = ExtractJob.run(slice, a.salt, a.sizeSort)
+    val extracted = ExtractJob.run(slice)
     // lineage counters ride INSIDE the write job via a per-unit accumulator
     // on a pass-through row map — one pass over the output total, no
     // second scan of scratch (result-stage accumulator updates are applied

@@ -4,13 +4,14 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.model.{ExtractedPage, Page}
+import graft.spark.ExtractJob
 
 /** Structured Streaming surface — the analogue of the reference's always-on
   * HTTP server mode (/root/reference/src/bin/server/server.rs:97-178): pages
-  * arrive continuously, each is extracted by the same per-row kernel, results
-  * stream to the output table. The batch and streaming paths share the exact
-  * same Extractor, so correctness properties (byte identity, graceful
-  * degradation) carry over verbatim.
+  * arrive continuously, each is extracted by ExtractJob.run — the same
+  * Dataset-level path the batch job uses, which works on both batch and
+  * streaming Datasets — and results stream to the output table. Correctness
+  * properties (byte identity, graceful degradation) carry over verbatim.
   *
   * Scale notes: the map is narrow (no state, no shuffle), so micro-batch
   * throughput equals batch throughput; watermarked windowed counters give the
@@ -19,14 +20,6 @@ import graft.model.{ExtractedPage, Page}
   * bottleneck.
   */
 object StreamExtract {
-
-  /** Streaming-safe transform: identical semantics to ExtractJob.run but with
-    * no repartition (salting is a batch concern; streaming micro-batches are
-    * already bounded). Works on both batch and streaming Datasets. */
-  def extractStream(pages: Dataset[Page]): Dataset[ExtractedPage] = {
-    import pages.sparkSession.implicits._
-    pages.mapPartitions(_.map(graft.Extractor.extract))
-  }
 
   /** Watermarked per-interval ingest metrics: pages, bytes, errors per
     * 1-minute event-time window per lang. */
@@ -112,7 +105,7 @@ object StreamExtract {
     import spark.implicits._
     val pageSchema = implicitly[org.apache.spark.sql.Encoder[Page]].schema
     val pages = spark.readStream.schema(pageSchema).parquet(inDir).as[Page]
-    val q = extractStream(pages)
+    val q = ExtractJob.run(pages)
       .drop("spans") // parquet sink demo keeps scalar columns
       .writeStream
       .option("checkpointLocation", ckpt)

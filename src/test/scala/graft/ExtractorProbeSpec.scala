@@ -111,7 +111,7 @@ class ExtractorProbeSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = probes.filterNot(_.url == "probe://realpdf-oversize")
     // local[N] runs each task once: a row that threw would fail the job
-    val errs = ExtractJob.run(spark.createDataset(rows), salt = 4)
+    val errs = ExtractJob.run(spark.createDataset(rows))
       .collect().map(r => nameOf(r.url) -> r.error).toMap
     assert(errs.keySet == rows.map(p => nameOf(p.url)).toSet)
     for ((name, err) <- errs)

@@ -134,6 +134,20 @@ class KernelSpec extends AnyFunSuite {
     assert(txt == "A B")
   }
 
+  test("sort-and-join: zero-height boxes with sub-pixel cy jitter share one line") {
+    import graft.geom.Box
+    import graft.pdf.PdfParser.{TextBox, sortAndJoin}
+    // a producer that emits no glyph extent (h = 0): the height-scaled
+    // tolerance has nothing to scale by and must fall back to the flat one,
+    // not split every jittered fragment onto its own line
+    val a = TextBox(Box(0, 5.0, 10, 5.0), "alpha", 0, 1)
+    val b = TextBox(Box(12, 5.3, 20, 5.3), "beta", 1, 2)
+    val c = TextBox(Box(22, 4.8, 30, 4.8), "gamma", 2, 3)
+    val (txt, used) = sortAndJoin(Vector(c, b, a), Box(0, 0, 30, 6))
+    assert(txt == "alpha beta gamma")
+    assert(used.map(_.text) == Vector("alpha", "beta", "gamma"))
+  }
+
   test("sort-and-join: soft wrap vs hard break by 30% right gap") {
     import graft.geom.Box
     import graft.pdf.PdfParser.{TextBox, sortAndJoin}

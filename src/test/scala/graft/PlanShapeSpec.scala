@@ -236,4 +236,51 @@ class PlanShapeSpec extends AnyFunSuite {
   }
   shape("d46_line_fix (operator)", Seq("Project"), Seq("Exchange"))(
     simple(ops.WebFilters.lineFix(documents)))
+
+  // d06: both ends of each simhash pair are counted from ONE reference to
+  // the lazy pair set; a self-union of it would plan the banded
+  // flatMapGroups subtree (MapGroups) twice and run it twice
+  test("d06_simhash: exactly one MapGroups (pair set computed once)") {
+    val p = planOf("d06_simhash")
+    val n = p.linesIterator.count(_.contains("MapGroups"))
+    assert(n == 1, s"$n MapGroups, expected 1, in plan:\n$p")
+  }
+
+  // extraction: `html` never crosses a shuffle. ExtractJob.run is one
+  // narrow map over the Page scan, and ExtractMain's scratch write
+  // partitions by a column computed in the same stage as the extraction.
+  private lazy val pageDir = {
+    val sp = spark
+    import sp.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-pages").resolve("pages").toString
+    sp.range(40).as[Long].map(i => fixtures.FixtureGen.fixture(i).page).write.parquet(dir)
+    dir
+  }
+  shape("ExtractJob.run over a Page scan", Seq("MapPartitions", "FileScan parquet"), Seq("Exchange")) {
+    val sp = spark
+    import sp.implicits._
+    simple(graft.spark.ExtractJob.run(sp.read.parquet(pageDir).as[model.Page]).toDF())
+  }
+  shape("ExtractMain scratch write", Seq("InsertIntoHadoopFsRelationCommand", "MapPartitions"),
+      Seq("Exchange hashpartitioning")) {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val p = qe.executedPlan.toString
+        if (p.contains("InsertIntoHadoopFsRelationCommand")) writes.add(p)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = java.nio.file.Files.createTempDirectory("graft-plan-extract").toString
+      graft.spark.ExtractMain.run(spark, graft.spark.ExtractMain.Args(in = pageDir, out = out, units = 4))
+      // listener events post asynchronously
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.IterableHasAsScala(writes).asScala.mkString("\n")
+  }
 }
