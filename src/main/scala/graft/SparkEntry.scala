@@ -134,24 +134,11 @@ object SparkEntry {
         (p.url, dec.charset.name(), dec.declared, pdf.PdfParser.isPdf(p.html))
       }.toDF("url", "charset", "declared", "is_pdf")
     }),
-    "x05_pdf_pages" -> ((s, d) => {
-      val pdfs = extracted(s, d).filter(col("isPdf"))
-      val pages = pdfs
+    "x05_pdf_pages" -> ((s, d) =>
+      extracted(s, d).filter(col("isPdf"))
         .select(col("url"), posexplode(split(col("text"), java.util.regex.Pattern.quote(pdf.PdfParser.PageBreak))).as(Seq("page_idx", "page_text")))
-      // formulas counted from the TYPED span surface (kind = pdf_formula or
-      // its decoded-offset-space variant pdf_formula_dec, blockIdx = page
-      // index) — a regex over the rendered text would miscount when body
-      // text legitimately contains $$
-      val formulas = pdfs
-        .select(col("url"), explode(col("spans")).as("span"))
-        .filter(col("span.kind").isin("pdf_formula", "pdf_formula_dec"))
-        .groupBy(col("url"), col("span.blockIdx").as("page_idx"))
-        .agg(count(lit(1)).as("nf"))
-      pages.join(formulas, Seq("url", "page_idx"), "left")
         .select(col("url"), col("page_idx"), length(col("page_text")).as("page_len"),
-          coalesce(col("nf"), lit(0L)).cast("int").as("n_formulas"),
-          sha2(to_binary(col("page_text"), lit("utf-8")), 256).as("page_sha256"))
-    }),
+          sha2(to_binary(col("page_text"), lit("utf-8")), 256).as("page_sha256"))),
     "x06_titles" -> ((s, d) => {
       import s.implicits._
       blocks(s, d).filter(col("block.kind") === "title" && col("block.keep"))

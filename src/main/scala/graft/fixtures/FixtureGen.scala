@@ -84,23 +84,12 @@ object FixtureGen {
     val url = s"https://host$host.example/${java.lang.Long.toString(rowId, 36)}"
     val ts = new java.sql.Timestamp(1767225600000L + rowId * 1000L) // 2026-01-01T00:00:00Z + rowId s
 
-    val isPdf = rowId % 50 == 1
-    if (isPdf) {
-      // lang cycles independently of rowId%4 (same fix as the real-PDF
-      // branch below): rowId%50==1 forces rowId odd, which under the
-      // rowId%4 rule locked every dialect page to zh/ar — the Latin
-      // needs-space join and en/de layout paths of the synthetic branch
-      // were never exercised by the golden gate
-      val pdfLang = Array("en", "zh", "de", "ar").apply(((rowId / 50) % 4).toInt)
-      val (bytes, expected, nSpans) = genPdf(r, pdfLang)
-      return Fixture(Page(url, ts, bytes, "", pdfLang), expected, nSpans)
-    }
-
     // genuine %PDF-1.x byte streams (uncompressed + FlateDecode text objects)
     // through the RealPdf parser; lang cycles independently of rowId%4 so all
-    // four scripts hit the real-PDF path
-    val isRealPdf = rowId % 50 == 26
-    if (isRealPdf) {
+    // four scripts hit the PDF path (rowId%50==1 forces rowId odd, which
+    // under the rowId%4 rule would lock those pages to zh/ar)
+    val isPdf = rowId % 50 == 1 || rowId % 50 == 26
+    if (isPdf) {
       val pdfLang = Array("en", "zh", "de", "ar").apply(((rowId / 50) % 4).toInt)
       val (bytes, expected, nSpans) = genRealPdf(r, pdfLang)
       return Fixture(Page(url, ts, bytes, "", pdfLang), expected, nSpans)
@@ -377,223 +366,6 @@ object FixtureGen {
   private def zipfHost(r: java.util.Random): Int = {
     val u = r.nextDouble()
     math.min(63, math.floor(math.pow(u, 3.0) * 64).toInt)
-  }
-
-  // ---- synthetic PDF payload ----------------------------------------------
-
-  /** Synthetic PDF pages exercising the whole layout branch: multi-column
-    * body pages (region grouping + soft-wrap) and single-column "rich" pages
-    * (header/footer <small>, titles, figures, tables with cell reconcile).
-    * The oracle inlines every rule (soft-wrap right-gap, needs-space join,
-    * element order, grid render) over the KNOWN geometry rather than calling
-    * the engine — a real independent byte-identity check. */
-  private def genPdf(r: java.util.Random, lang: String): (Array[Byte], String, Int) = {
-    val sb = new java.lang.StringBuilder(2048)
-    sb.append("%PDF-GRAFT 2\n")
-    def d1(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    @inline def needsSpace(acc: CharSequence): Boolean =
-      acc.length > 0 && {
-        val ch = acc.charAt(acc.length - 1)
-        (ch >= 'a' && ch <= 'z') || (ch >= 'A' && ch <= 'Z')
-      }
-    def words(n: Int): String = (0 until n).map(_ => wordFor(lang, r.nextInt(4096))).mkString(" ")
-
-    val nPages = 1 + r.nextInt(3)
-    val pageTexts = Vector.newBuilder[String]
-    var nSpans = 0
-    for (_ <- 0 until nPages) {
-      sb.append("P 600 800\n")
-      val pieces = Vector.newBuilder[String]
-      val bodyEmit = new scala.collection.mutable.ArrayBuffer[String]() // T lines, shuffled
-      val fixedEmit = new scala.collection.mutable.ArrayBuffer[String]() // H/F/L/G/R/C/D, ordered
-
-      /** One text region at [x0, colRight]: nParas paragraphs of 2-4 lines
-        * each, lines 22 apart (same region), full lines ending exactly at
-        * colRight (soft wrap), each paragraph's last line short (right gap
-        * 50% > 30% => hard break). Appends T lines + expected pieces. */
-      def emitRegion(x0: Double, colRight: Double, yStart: Double, nParas: Int): Double = {
-        val wTot = colRight - x0
-        var y = yStart
-        val region = new java.lang.StringBuilder(256)
-        var prevHard = false
-        for (_ <- 0 until nParas) {
-          val nLines = 2 + r.nextInt(3)
-          for (l <- 0 until nLines) {
-            val isLast = l == nLines - 1
-            val lineEnd = if (isLast) x0 + wTot * 0.45 else colRight
-            val span = lineEnd - x0
-            val nFrag = 1 + r.nextInt(3)
-            val fw = (span - 0.5 * (nFrag - 1)) / nFrag
-            val fragTexts = new scala.collection.mutable.ArrayBuffer[String](nFrag)
-            for (f <- 0 until nFrag) {
-              val t = words(1 + r.nextInt(3))
-              val x = x0 + f * (fw + 0.5)
-              bodyEmit += s"T ${d1(x)} ${d1(y)} ${d1(fw)} 12.0 $t"
-              nSpans += 1
-              fragTexts += t
-            }
-            // reading order within the line: Arabic pages are majority-RTL,
-            // so fragments read right-to-left (the engine's line-orientation
-            // fix); needs-space join never fires on Arabic (non-ASCII tail)
-            val ordered = if (lang == "ar") fragTexts.reverse else fragTexts
-            val line = new java.lang.StringBuilder(64)
-            for (t <- ordered) {
-              if (needsSpace(line)) line.append(' ')
-              line.append(t)
-            }
-            if (region.length() > 0) {
-              if (prevHard) region.append('\n')
-              else if (needsSpace(region)) region.append(' ')
-            }
-            region.append(line)
-            prevHard = isLast
-            y += 22.0
-          }
-        }
-        region.toString.split('\n').filter(_.nonEmpty).foreach(pieces += _)
-        y
-      }
-
-      val rich = r.nextInt(10) < 5
-      if (!rich) {
-        // multi-column body page: regions read column-major
-        val nCols = 1 + r.nextInt(3)
-        val colW = 600.0 / nCols
-        for (c <- 0 until nCols) {
-          val x0 = c * colW + 10
-          emitRegion(x0, x0 + colW - 40, 40.0, 1 + r.nextInt(2))
-        }
-      } else {
-        // single-column rich page: header, titles, figures, table, footer —
-        // all full-width and vertically stacked so the enhanced sort's
-        // expected order is the construction (y) order
-        val x0 = 10.0; val colRight = 590.0
-        if (r.nextInt(10) < 6) {
-          val t = words(2 + r.nextInt(2))
-          fixedEmit += s"H ${d1(x0)} 8.0 580.0 10.0 $t"
-          pieces += s"<small>$t</small>"
-          nSpans += 1
-        }
-        var y = 40.0
-        if (r.nextInt(2) == 0) {
-          val t = words(2 + r.nextInt(3))
-          fixedEmit += s"L ${d1(x0)} ${d1(y)} 580.0 16.0 1 $t"
-          pieces += "# " + t
-          nSpans += 1
-          y += 46.0
-        }
-        val nSections = 1 + r.nextInt(2)
-        for (_ <- 0 until nSections) {
-          if (r.nextInt(10) < 7) {
-            val t = words(2 + r.nextInt(3))
-            fixedEmit += s"L ${d1(x0)} ${d1(y)} 580.0 14.0 2 $t"
-            pieces += "## " + t
-            nSpans += 1
-            y += 44.0
-          }
-          y = emitRegion(x0, colRight, y, 1 + r.nextInt(3))
-          y += 30.0 // region gap
-          if (r.nextInt(10) < 4) {
-            val cap = words(2 + r.nextInt(3))
-            fixedEmit += s"G ${d1(x0)} ${d1(y)} 580.0 60.0 $cap"
-            pieces += s"![Figure]($cap)"
-            nSpans += 1
-            y += 90.0
-          }
-          if (r.nextInt(10) < 3) {
-            // formula box: raw latex with messy internal whitespace — the
-            // engine must normalize (collapse runs, trim) inside $$..$$
-            val a2 = 1 + r.nextInt(9); val b2 = 1 + r.nextInt(9)
-            val lat = s"E_{$a2}  =\t m c^$b2 "
-            fixedEmit += s"M ${d1(x0)} ${d1(y)} 580.0 40.0 $lat"
-            pieces += "$$" + s"E_{$a2} = m c^$b2" + "$$"
-            nSpans += 1
-            if (r.nextInt(2) == 0) {
-              // OCR-style fragment inside the formula region: mask-then-
-              // detect must consume it (no body region, no span)
-              bodyEmit += s"T ${d1(x0 + 20.0)} ${d1(y + 14.0)} 80.0 12.0 maskedfrag"
-            }
-            y += 70.0
-          }
-          if (r.nextInt(10) < 4) {
-            // table: rows x cols grid at (10, y), cell 100x24
-            val nRows = 2 + r.nextInt(2)
-            val nCols = 2 + r.nextInt(2)
-            val cw = 100.0; val ch = 24.0
-            fixedEmit += s"R ${d1(x0)} ${d1(y)} ${d1(cw * nCols)} ${d1(ch * nRows)} $nRows $nCols"
-            val variant = r.nextInt(4) // 0,1: C cells; 2: C + jittered D; 3: no cells (kmeans)
-            // one row may carry a single text box straddling cells 0 and 1 —
-            // the engine must split it at the overlap-proportional midpoint
-            val straddleRow = if (variant <= 1 && r.nextInt(3) == 0) 1 else -1
-            val gridRows = Vector.newBuilder[Vector[(Int, Int, Boolean, String)]]
-            for (ri <- 0 until nRows) {
-              val row = Vector.newBuilder[(Int, Int, Boolean, String)]
-              if (ri == straddleRow) {
-                for (ci <- 0 until nCols) {
-                  val cx = x0 + ci * cw; val cy = y + ri * ch
-                  fixedEmit += s"C ${d1(cx)} ${d1(cy)} ${d1(cw)} ${d1(ch)}"
-                }
-                // wide box from cell0+2 to cell1-2: equal overlap with both
-                val t = words(2 + r.nextInt(2))
-                bodyEmit += s"T ${d1(x0 + 2.0)} ${d1(y + ri * ch + 6)} ${d1(2 * cw - 4.0)} 12.0 $t"
-                nSpans += 2 // engine emits one span per split fragment
-                // oracle replicates the proportional split (equal widths →
-                // bounds at round(n/2)) and the per-cell join's trailing-ws
-                // trim (stitching trim_end)
-                val mid = math.round(t.length / 2.0).toInt
-                def trimEnd(x: String): String = {
-                  var e = x.length
-                  while (e > 0 && Character.isWhitespace(x.charAt(e - 1))) e -= 1
-                  x.substring(0, e)
-                }
-                row += ((1, 1, false, trimEnd(t.substring(0, mid))))
-                row += ((1, 1, false, trimEnd(t.substring(mid))))
-                for (ci <- 2 until nCols) {
-                  val cx = x0 + ci * cw; val cy = y + ri * ch
-                  val tc = words(1)
-                  bodyEmit += s"T ${d1(cx + 2)} ${d1(cy + 6)} ${d1(math.min(cw - 6, 4.0 + tc.length * 3.0))} 12.0 $tc"
-                  nSpans += 1
-                  row += ((1, 1, false, tc))
-                }
-              } else {
-                for (ci <- 0 until nCols) {
-                  val cx = x0 + ci * cw; val cy = y + ri * ch
-                  if (variant <= 2) fixedEmit += s"C ${d1(cx)} ${d1(cy)} ${d1(cw)} ${d1(ch)}"
-                  if (variant == 2) {
-                    val jx = (r.nextInt(5) - 2) * 0.5; val jy = (r.nextInt(5) - 2) * 0.5
-                    fixedEmit += s"D ${d1(cx + jx)} ${d1(cy + jy)} ${d1(cw)} ${d1(ch)}"
-                  }
-                  val t = words(1 + r.nextInt(2))
-                  bodyEmit += s"T ${d1(cx + 2)} ${d1(cy + 6)} ${d1(math.min(cw - 6, 4.0 + t.length * 3.0))} 12.0 $t"
-                  nSpans += 1
-                  row += ((1, 1, false, t))
-                }
-              }
-              gridRows += row.result()
-            }
-            pieces += TableGrid.render(TableGrid.resolve(gridRows.result()))
-            y += ch * nRows + 30.0
-          }
-        }
-        if (r.nextInt(10) < 6) {
-          val t = words(2 + r.nextInt(2))
-          fixedEmit += s"F ${d1(x0)} 780.0 580.0 12.0 $t"
-          pieces += s"<small>$t</small>"
-          nSpans += 1
-        }
-      }
-
-      // shuffle T-line emission deterministically (layout must re-derive order)
-      val order = bodyEmit.indices.toArray
-      var i = order.length - 1
-      while (i > 0) { val j = r.nextInt(i + 1); val t = order(i); order(i) = order(j); order(j) = t; i -= 1 }
-      for (line <- fixedEmit) sb.append(line).append('\n')
-      for (k <- order) sb.append(bodyEmit(k)).append('\n')
-      sb.append("E\n")
-      pageTexts += pieces.result().mkString("\n\n")
-    }
-    val expected = pageTexts.result().mkString("\n\n--- Page Break ---\n\n")
-    (sb.toString.getBytes(StandardCharsets.UTF_8), expected, nSpans)
   }
 
   // ---- genuine %PDF-1.x payload --------------------------------------------

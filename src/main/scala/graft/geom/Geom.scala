@@ -49,101 +49,3 @@ object Geom {
     Box(b.cx - hw, b.cy - hh, b.cx + hw, b.cy + hh)
   }
 }
-
-/** Recursive XY-cut reading-order sort for positioned text boxes (the PDF
-  * branch has no DOM, so order must be derived geometrically).
-  *
-  * Algorithm per the reference's projection-profile cut
-  * (/root/reference/src/processors/sorting.rs:161-493): project boxes onto an
-  * axis, split at gaps in the occupancy profile, recurse alternating Y then X.
-  * Returns indices into the input array in reading order.
-  */
-object XYCut {
-
-  def readingOrder(boxes: Array[Box]): Array[Int] = {
-    if (boxes.isEmpty) return Array.empty
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    // Match the reference's recursive_xy_cut entry: cut X (columns) first so
-    // multi-column pages read column-by-column, then Y within a column.
-    cut(boxes, boxes.indices.toArray, vertical = true, out, depth = 0)
-    out.toArray
-  }
-
-  /** @param vertical true => split along X into columns; false => along Y into rows */
-  private def cut(
-      boxes: Array[Box],
-      idxs: Array[Int],
-      vertical: Boolean,
-      out: scala.collection.mutable.ArrayBuffer[Int],
-      depth: Int
-  ): Unit = {
-    if (idxs.length <= 1 || depth > 24) {
-      // leaf: stable order by (y, x) with a same-line tolerance, mirroring
-      // the reference quad sort (/root/reference/src/processors/sorting.rs:35-84)
-      val sorted = idxs.sortBy(i => (boxes(i).y1, boxes(i).x1))
-      out ++= bubbleSameLine(boxes, sorted)
-      return
-    }
-    val groups = splitAtGaps(boxes, idxs, vertical)
-    if (groups.length <= 1) {
-      if (vertical) cut(boxes, idxs, vertical = false, out, depth + 1)
-      else {
-        val sorted = idxs.sortBy(i => (boxes(i).y1, boxes(i).x1))
-        out ++= bubbleSameLine(boxes, sorted)
-      }
-    } else {
-      groups.foreach(g => cut(boxes, g, !vertical, out, depth + 1))
-    }
-  }
-
-  /** Projection profile split: find maximal runs separated by empty gaps.
-    * (/root/reference/src/processors/sorting.rs:219-301)
-    */
-  private def splitAtGaps(
-      boxes: Array[Box],
-      idxs: Array[Int],
-      vertical: Boolean
-  ): Array[Array[Int]] = {
-    // interval per box on the chosen axis
-    val iv = idxs.map { i =>
-      val b = boxes(i)
-      if (vertical) (b.x1, b.x2) else (b.y1, b.y2)
-    }
-    val order = iv.indices.toArray.sortBy(j => iv(j)._1)
-    val groups = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
-    var cur = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var hi = Double.NegativeInfinity
-    val minGap = 1.0 // like the reference's gap threshold of >=1 unit
-    for (j <- order) {
-      val (lo, h) = iv(j)
-      if (cur.isEmpty || lo < hi + minGap) {
-        cur += idxs(j); hi = math.max(hi, h)
-      } else {
-        groups += cur.toArray; cur = scala.collection.mutable.ArrayBuffer(idxs(j)); hi = h
-      }
-    }
-    if (cur.nonEmpty) groups += cur.toArray
-    // group order: columns left->right, rows top->bottom — both are ascending
-    groups.toArray
-  }
-
-  /** Same-line bubble pass: boxes whose vertical centers are within tolerance
-    * are reordered left-to-right (/root/reference/src/processors/sorting.rs:58-84).
-    */
-  private def bubbleSameLine(boxes: Array[Box], sorted: Array[Int]): Array[Int] = {
-    // group boxes whose y1 fall within tol of the line anchor, then order
-    // each line left-to-right
-    val a = sorted
-    val tol = 10.0
-    val outB = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var k = 0
-    while (k < a.length) {
-      val anchor = boxes(a(k)).y1
-      var e = k
-      while (e < a.length && math.abs(boxes(a(e)).y1 - anchor) < tol) e += 1
-      outB ++= a.slice(k, e).sortBy(idx => boxes(idx).x1)
-      k = e
-    }
-    outB.toArray
-  }
-}

@@ -1,150 +1,11 @@
 package graft.geom
 
-/** Table-cell geometry kernels — ports of the reference's cell
-  * reconciliation pipeline (/root/reference/src/processors/layout_utils.rs:
-  * 255-534): structure cells provide the logical grid size N, detected cells
-  * provide precise geometry, and k-means-style center clustering bridges
-  * count mismatches. Pure functions called inside row mappers only.
-  */
-object Cells {
-
-  /** Combine `rects` into at most `targetN` boxes by k-means on box centers
-    * (first-targetN init, 10 iterations, cluster -> union bbox), mirroring
-    * `combine_rectangles_kmeans` (/root/reference/src/processors/layout_utils.rs:430-534).
-    * Deterministic: no random init. */
-  def combineRectanglesKmeans(rects: IndexedSeq[Box], targetN: Int): Vector[Box] = {
-    val n = rects.length
-    if (n == 0 || targetN == 0) return Vector.empty
-    if (targetN >= n) return rects.toVector
-    val px = rects.map(_.cx).toArray
-    val py = rects.map(_.cy).toArray
-    val cx = new Array[Double](targetN)
-    val cy = new Array[Double](targetN)
-    var c = 0
-    while (c < targetN) { cx(c) = px(c); cy(c) = py(c); c += 1 }
-    val labels = new Array[Int](n)
-    var iter = 0
-    var changed = true
-    while (iter < 10 && changed) {
-      changed = false
-      var i = 0
-      while (i < n) {
-        var best = 0; var bestD = Double.MaxValue
-        var k = 0
-        while (k < targetN) {
-          val dx = px(i) - cx(k); val dy = py(i) - cy(k)
-          val d = dx * dx + dy * dy
-          if (d < bestD) { bestD = d; best = k }
-          k += 1
-        }
-        if (labels(i) != best) { labels(i) = best; changed = true }
-        i += 1
-      }
-      val sx = new Array[Double](targetN); val sy = new Array[Double](targetN)
-      val cnt = new Array[Int](targetN)
-      var j = 0
-      while (j < n) { val l = labels(j); sx(l) += px(j); sy(l) += py(j); cnt(l) += 1; j += 1 }
-      c = 0
-      while (c < targetN) {
-        if (cnt(c) > 0) { cx(c) = sx(c) / cnt(c); cy(c) = sy(c) / cnt(c) }
-        c += 1
-      }
-      iter += 1
-    }
-    val out = Vector.newBuilder[Box]
-    c = 0
-    while (c < targetN) {
-      var x1 = Double.MaxValue; var y1 = Double.MaxValue
-      var x2 = Double.MinValue; var y2 = Double.MinValue
-      var any = false
-      var i = 0
-      while (i < n) {
-        if (labels(i) == c) {
-          val r = rects(i)
-          x1 = math.min(x1, r.x1); y1 = math.min(y1, r.y1)
-          x2 = math.max(x2, r.x2); y2 = math.max(y2, r.y2)
-          any = true
-        }
-        i += 1
-      }
-      if (any) out += Box(x1, y1, x2, y2)
-      c += 1
-    }
-    val res = out.result()
-    if (res.isEmpty) rects.toVector else res
-  }
-
-  /** NMS-with-merge — the reference's same-class variant
-    * (/root/reference/src/processors/layout_postprocess.rs apply_nms_with_
-    * merge): overlapping boxes of one class are UNIONED rather than
-    * suppressed (a detector double-firing on one cell yields one box).
-    * Greedy transitive clustering on IoU > threshold, earlier boxes seed
-    * clusters; output order follows first member. */
-  def nmsWithMerge(boxes: IndexedSeq[Box], iouThresh: Double = 0.5): Vector[Box] = {
-    val n = boxes.length
-    if (n <= 1) return boxes.toVector
-    val cluster = Array.tabulate(n)(identity)
-    def root(i: Int): Int = { var r = i; while (cluster(r) != r) r = cluster(r); r }
-    for (i <- 0 until n; j <- (i + 1) until n)
-      if (Geom.iou(boxes(i), boxes(j)) > iouThresh) {
-        val (ri, rj) = (root(i), root(j))
-        if (ri != rj) cluster(math.max(ri, rj)) = math.min(ri, rj)
-      }
-    val seen = scala.collection.mutable.LinkedHashMap.empty[Int, Box]
-    for (i <- 0 until n) {
-      val r = root(i)
-      seen.get(r) match {
-        case None => seen(r) = boxes(i)
-        case Some(b) => seen(r) = Box(math.min(b.x1, boxes(i).x1), math.min(b.y1, boxes(i).y1),
-          math.max(b.x2, boxes(i).x2), math.max(b.y2, boxes(i).y2))
-      }
-    }
-    seen.values.toVector
-  }
-
-  /** Reconcile structure cells (logical grid, length N) with detected cells
-    * (precise geometry): detected cells are k-means-reduced to N if there are
-    * more, then each is assigned to its best-IoU structure cell (min IoU
-    * 0.001); unmatched structure cells keep their own box (fill), single
-    * matches take the detected box, multiple matches merge to their union
-    * (compress). Port of `reconcile_table_cells`
-    * (/root/reference/src/processors/layout_utils.rs:255-320). */
-  def reconcile(structCells: IndexedSeq[Box], detCells: IndexedSeq[Box]): Vector[Box] = {
-    val n = structCells.length
-    if (n == 0) return Vector.empty
-    if (detCells.isEmpty) return structCells.toVector
-    val det: Vector[Box] =
-      if (detCells.length > n) combineRectanglesKmeans(detCells, n)
-      else detCells.toVector
-    val assigned = Array.fill(n)(List.empty[Int])
-    for (di <- det.indices) {
-      var bestIou = 0.001
-      var bestSi = -1
-      for (si <- 0 until n) {
-        val v = Geom.iou(det(di), structCells(si))
-        if (v > bestIou) { bestIou = v; bestSi = si }
-      }
-      if (bestSi >= 0) assigned(bestSi) = di :: assigned(bestSi)
-    }
-    Vector.tabulate(n) { si =>
-      assigned(si) match {
-        case Nil       => structCells(si)
-        case di :: Nil => det(di)
-        case dis =>
-          dis.map(det).reduce((a, b) =>
-            Box(math.min(a.x1, b.x1), math.min(a.y1, b.y1),
-              math.max(a.x2, b.x2), math.max(a.y2, b.y2)))
-      }
-    }
-  }
-}
-
 /** Enhanced reading-order sort — port of the reference's weighted-distance
   * insertion (/root/reference/src/processors/layout_sorting.rs:125-471):
-  * headers first, footers last; body text regions keep their XY-cut order and
-  * the floating elements (doc titles, vision anchors = tables/figures,
-  * paragraph titles) are inserted one by one next to their nearest neighbor
-  * under an edge-distance metric weighted per element class.
+  * body text regions keep their region order and the floating elements
+  * (doc titles, vision anchors = tables, paragraph titles) are inserted one
+  * by one next to their nearest neighbor under an edge-distance metric
+  * weighted per element class.
   */
 object LayoutSort {
 
@@ -152,7 +13,7 @@ object LayoutSort {
   case object NormalText extends Label
   case object DocTitle extends Label
   case object ParaTitle extends Label
-  case object Vision extends Label // tables, figures: strong anchors
+  case object Vision extends Label // tables: strong anchors
 
   final case class Sortable(box: Box, label: Label, payload: Int)
 
@@ -268,117 +129,14 @@ object LayoutSort {
     els.zipWithIndex.collect { case (e, i) if !dropped(i) => e }
   }
 
-  /** Full enhanced order: headers (by y) ++ main ++ footers (by y), where
-    * main = XY-cut-ordered NormalText with DocTitle, then Vision, then
-    * ParaTitle blocks weighted-inserted (each class pre-sorted by y). */
-  def enhancedOrder(
-      headers: Vector[Sortable], footers: Vector[Sortable],
-      textRegions: Vector[Sortable], floating: Vector[Sortable]): Vector[Sortable] = {
+  /** Full enhanced order: the NormalText regions in their given order, with
+    * DocTitle, then Vision, then ParaTitle blocks weighted-inserted (each
+    * class pre-sorted by y). */
+  def enhancedOrder(textRegions: Vector[Sortable], floating: Vector[Sortable]): Vector[Sortable] = {
     val sorted = scala.collection.mutable.ArrayBuffer.from(textRegions)
     for (b <- floating.filter(_.label == DocTitle).sortBy(_.box.y1)) weightedInsert(b, sorted)
     for (b <- floating.filter(_.label == Vision).sortBy(_.box.y1)) weightedInsert(b, sorted)
     for (b <- floating.filter(_.label == ParaTitle).sortBy(_.box.y1)) weightedInsert(b, sorted)
-    headers.sortBy(_.box.y1) ++ sorted ++ footers.sortBy(_.box.y1)
-  }
-}
-
-/** Polygon kernels the reference ships for rotated/quad detection boxes
-  * (/root/reference/src/processors/geometry.rs:210-429): convex hull
-  * (Graham scan), minimum-area enclosing rectangle (rotating calipers over
-  * the hull), and Douglas-Peucker polyline simplification. The PDF branch is
-  * axis-aligned today; these are the kernels a rotated-box dialect plugs into.
-  */
-object Poly {
-
-  type Pt = (Double, Double)
-
-  @inline private def cross(o: Pt, a: Pt, b: Pt): Double =
-    (a._1 - o._1) * (b._2 - o._2) - (a._2 - o._2) * (b._1 - o._1)
-
-  /** Convex hull in counter-clockwise order (Andrew monotone chain — same
-    * result as the reference's Graham scan, fewer edge cases). Collinear
-    * points are dropped. */
-  def convexHull(points: IndexedSeq[Pt]): Vector[Pt] = {
-    val ps = points.distinct.sortBy(p => (p._1, p._2))
-    if (ps.length <= 2) return ps.toVector
-    val lower = scala.collection.mutable.ArrayBuffer.empty[Pt]
-    for (p <- ps) {
-      while (lower.length >= 2 && cross(lower(lower.length - 2), lower.last, p) <= 0)
-        lower.remove(lower.length - 1)
-      lower += p
-    }
-    val upper = scala.collection.mutable.ArrayBuffer.empty[Pt]
-    for (p <- ps.reverseIterator) {
-      while (upper.length >= 2 && cross(upper(upper.length - 2), upper.last, p) <= 0)
-        upper.remove(upper.length - 1)
-      upper += p
-    }
-    (lower.dropRight(1) ++ upper.dropRight(1)).toVector
-  }
-
-  /** Minimum-area enclosing rectangle via rotating calipers on the hull:
-    * (centerX, centerY, width, height, angleDegrees), angle in [0, 90). */
-  def minAreaRect(points: IndexedSeq[Pt]): (Double, Double, Double, Double, Double) = {
-    val hull = convexHull(points)
-    if (hull.isEmpty) return (0, 0, 0, 0, 0)
-    if (hull.length == 1) return (hull.head._1, hull.head._2, 0, 0, 0)
-    var best = (0.0, 0.0, 0.0, 0.0, 0.0)
-    var bestArea = Double.PositiveInfinity
-    val m = hull.length
-    for (i <- 0 until m) {
-      val (ax, ay) = hull(i)
-      val (bx, by) = hull((i + 1) % m)
-      val elen = math.hypot(bx - ax, by - ay)
-      if (elen > 0) {
-        val ux = (bx - ax) / elen; val uy = (by - ay) / elen // edge direction
-        val vx = -uy; val vy = ux                            // normal
-        var minU = Double.MaxValue; var maxU = Double.MinValue
-        var minV = Double.MaxValue; var maxV = Double.MinValue
-        for ((px, py) <- hull) {
-          val u = px * ux + py * uy
-          val v = px * vx + py * vy
-          minU = math.min(minU, u); maxU = math.max(maxU, u)
-          minV = math.min(minV, v); maxV = math.max(maxV, v)
-        }
-        val wdt = maxU - minU; val hgt = maxV - minV
-        val area = wdt * hgt
-        if (area < bestArea) {
-          bestArea = area
-          val cu = (minU + maxU) / 2; val cv = (minV + maxV) / 2
-          val cx = cu * ux + cv * vx; val cy = cu * uy + cv * vy
-          // fold the edge angle into [0, 90) — SWAPPING w/h when folding by
-          // the odd 90: an edge at 100° reported as (w, h, 10°) would put
-          // the wrong side along the 10° axis
-          var ang = math.toDegrees(math.atan2(uy, ux)) % 180.0
-          if (ang < 0) ang += 180.0
-          best =
-            if (ang >= 90.0) (cx, cy, hgt, wdt, ang - 90.0)
-            else (cx, cy, wdt, hgt, ang)
-        }
-      }
-    }
-    best
-  }
-
-  /** Douglas-Peucker polyline simplification with tolerance `eps`. */
-  def douglasPeucker(points: IndexedSeq[Pt], eps: Double): Vector[Pt] = {
-    if (points.length < 3) return points.toVector
-    def perpDist(p: Pt, a: Pt, b: Pt): Double = {
-      val dx = b._1 - a._1; val dy = b._2 - a._2
-      val len = math.hypot(dx, dy)
-      if (len == 0) math.hypot(p._1 - a._1, p._2 - a._2)
-      else math.abs(dy * p._1 - dx * p._2 + b._1 * a._2 - b._2 * a._1) / len
-    }
-    def rec(lo: Int, hi: Int): Vector[Pt] = {
-      var maxD = 0.0
-      var idx = -1
-      for (i <- (lo + 1) until hi) {
-        val d = perpDist(points(i), points(lo), points(hi))
-        if (d > maxD) { maxD = d; idx = i }
-      }
-      if (maxD > eps) rec(lo, idx).dropRight(1) ++ rec(idx, hi)
-      else Vector(points(lo), points(hi))
-    }
-    rec(0, points.length - 1)
+    sorted.toVector
   }
 }

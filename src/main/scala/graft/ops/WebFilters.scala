@@ -39,7 +39,10 @@ object WebFilters {
     * parents); real-world hosts are < 8 labels deep.
     *
     * Output: input columns + `block_category` (null = unlisted) + `blocked`
-    * (0/1 int — int not boolean so every oracle engine hashes it alike). */
+    * (0/1 int — int not boolean so every oracle engine hashes it alike).
+    * These names and the `_bl_host_*` / `_bl_cat_*` join columns are
+    * reserved: an input frame that already has one is rejected, never
+    * silently overwritten or shadowed. */
   /** DNS names are case-insensitive and may arrive as FQDNs with a root
     * dot; UT1 lists are lowercase without one. Normalize both sides the
     * same way before any comparison. */
@@ -49,6 +52,10 @@ object WebFilters {
       hostCol: String = "host", levels: Int = 4,
       blHostCol: String = "host", blCatCol: String = "category"): DataFrame = {
     require(levels >= 1 && levels <= 8, s"levels must be in [1,8], got $levels")
+    for (c <- df.columns)
+      require(c != "block_category" && c != "blocked" &&
+        !c.startsWith("_bl_host_") && !c.startsWith("_bl_cat_"),
+        s"blocklistFilter: input column '$c' collides with a reserved output column")
     val bl = blocklist
       .select(normHost(col(blHostCol).cast("string")).as("bl_host"),
         col(blCatCol).cast("string").as("bl_cat"))

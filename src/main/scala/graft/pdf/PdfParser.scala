@@ -1,41 +1,20 @@
 package graft.pdf
 
-import graft.geom.{Box, Cells, Geom, LayoutSort}
-import graft.assemble.{JoinRules, TitleLevel}
+import graft.geom.{Box, Geom, LayoutSort}
+import graft.assemble.TitleLevel
 import graft.html.TableGrid
 import graft.model.Span
 
-/** Embedded-PDF payload branch: magic-byte sniff + columnar page-segmentation
-  * parse, the analogue of the reference's PDF render path
-  * (/root/reference/src/bin/server/pdf.rs:69-152, sniff :167-169) feeding the
-  * layout pipeline: region grouping, enhanced reading-order sort
-  * (/root/reference/src/processors/layout_sorting.rs:125-471), table cell
-  * reconciliation (/root/reference/src/processors/layout_utils.rs:255-534),
-  * and the smart-join soft-wrap rule
-  * (/root/reference/src/oarocr/stitching.rs:603-697).
+/** Embedded-PDF payload branch: `%PDF` magic-byte sniff, then [[RealPdf]]
+  * parses the bytes into positioned boxes per page, and this object lays
+  * each page out — the analogue of the reference's PDF render path
+  * (`src/bin/server/pdf.rs:69-152`, sniff `:167-169`) feeding the layout
+  * pipeline: region grouping, enhanced reading-order sort
+  * (`src/processors/layout_sorting.rs:125-471`), table cell assignment,
+  * and the smart-join soft-wrap rule (`src/oarocr/stitching.rs:603-697`).
   *
-  * The container libraries for real PDF decoding are not available here, so
-  * the payload is a deterministic synthetic dialect (FIXTURES.md §2) carrying
-  * exactly what the layout branch consumes — positioned element boxes:
-  *
-  * {{{
-  * %PDF-GRAFT 2\n
-  * P <w> <h>\n                  -- page start
-  * T <x> <y> <w> <h> <text>\n   -- body text box (text = rest of line)
-  * H <x> <y> <w> <h> <text>\n   -- page header box  -> <small>text</small>
-  * F <x> <y> <w> <h> <text>\n   -- page footer box  -> <small>text</small>
-  * L <x> <y> <w> <h> <lvl> <text>\n -- title box    -> "#"*lvl + " " + text
-  * G <x> <y> <w> <h> <caption>\n -- figure box      -> ![Figure](caption)
-  * M <x> <y> <w> <h> <latex>\n  -- formula box      -> $$normalized latex$$
-  * R <x> <y> <w> <h> <rows> <cols>\n -- table region (T boxes inside belong to it)
-  * C <x> <y> <w> <h>\n          -- structure cell of the last R
-  * D <x> <y> <w> <h>\n          -- detected cell of the last R
-  * E\n                          -- page end
-  * }}}
-  *
-  * The Spark-side plumbing (sniff, per-page flatten, geometric ordering,
-  * byte-offset spans, page-break join) is the real, tested part; swapping a
-  * real PDF text-object decoder in changes only `parsePayload`.
+  * The page model holds exactly what `RealPdf` emits: body text boxes,
+  * font-size-promoted titles, and ruling-line tables with their cells.
   */
 object PdfParser {
 
@@ -45,14 +24,11 @@ object PdfParser {
   final case class TextBox(box: Box, text: String, beginByte: Long, endByte: Long,
       decoded: Boolean = false)
   final case class TitleBox(level: Int, tb: TextBox)
-  final case class TableSpec(box: Box, rows: Int, cols: Int,
-      structCells: Vector[Box], detCells: Vector[Box])
+  /** A table region and its grid cells (non-empty: `RealPdf` emits a table
+    * only for a grid of at least two cells). */
+  final case class TableSpec(box: Box, cells: Vector[Box])
   final case class PdfPage(width: Double, height: Double,
-      boxes: Vector[TextBox],
-      headers: Vector[TextBox], footers: Vector[TextBox],
-      titles: Vector[TitleBox], figures: Vector[TextBox],
-      tables: Vector[TableSpec],
-      formulas: Vector[TextBox] = Vector.empty)
+      boxes: Vector[TextBox], titles: Vector[TitleBox], tables: Vector[TableSpec])
 
   /** Typed page element for ordering/rendering — a Sortable's payload indexes
     * ONE unified element vector of these, so element identity is carried as a
@@ -60,33 +36,10 @@ object PdfParser {
   private sealed trait PageEl
   private final case class RegionEl(boxes: Vector[TextBox]) extends PageEl
   private final case class TitleEl(t: TitleBox) extends PageEl
-  private final case class FigureEl(f: TextBox) extends PageEl
-  private final case class FormulaEl(f: TextBox) extends PageEl
   private final case class TableEl(idx: Int) extends PageEl
-  private final case class HeaderEl(h: TextBox) extends PageEl
-  private final case class FooterEl(f: TextBox) extends PageEl
-
-  /** `normalize_latex` analogue (/root/reference/src/processors/mod.rs:43):
-    * whitespace runs collapse to one space, ends trimmed — formula sources
-    * carry layout newlines/indentation that must not leak into `$$..$$`. */
-  def normalizeLatex(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    var pendingWs = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c)) pendingWs = sb.length() > 0
-      else {
-        if (pendingWs) { sb.append(' '); pendingWs = false }
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
 
   /** Matches the reference's page-join in multi-page responses
-    * (/root/reference/src/bin/server/ocr.rs:190-240). */
+    * (`src/bin/server/ocr.rs:190-240`). */
   val PageBreak = "\n\n--- Page Break ---\n\n"
 
   /** same-visual-line center-y tolerance (stitching.rs same_line_y_tolerance) */
@@ -97,133 +50,12 @@ object PdfParser {
   /** column split: x-interval gap threshold (projection-profile gap) */
   val ColGapMin = 1.0
   /** text-region split within a column: y-interval gap threshold — a gap this
-    * large means another element (figure, title, table) sits between */
+    * large means another element (title, table) sits between */
   val RegionGapMin = 20.0
 
   def isPdf(html: Array[Byte]): Boolean =
     html.length >= 4 && html(0) == '%' && html(1) == 'P' &&
       html(2) == 'D' && html(3) == 'F'
-
-  /** Parse the synthetic dialect tracking byte offsets of each box's text. */
-  def parsePayload(bytes: Array[Byte]): Vector[PdfPage] = {
-    val pages = Vector.newBuilder[PdfPage]
-    var boxes = Vector.newBuilder[TextBox]
-    var headers = Vector.newBuilder[TextBox]
-    var footers = Vector.newBuilder[TextBox]
-    var titles = Vector.newBuilder[TitleBox]
-    var figures = Vector.newBuilder[TextBox]
-    var formulas = Vector.newBuilder[TextBox]
-    var tables = Vector.newBuilder[TableSpec]
-    // in-progress table: cells accumulate in O(1) builders and the spec is
-    // appended at flush (the rebuild-the-Vector-per-cell-line version was
-    // O(cells x tables) copying on attacker-sized payloads)
-    var curTable: TableSpec = null
-    var curStruct = Vector.newBuilder[Box]
-    var curDet = Vector.newBuilder[Box]
-    var pw = 0.0; var ph = 0.0; var inPage = false
-    val n = bytes.length
-    var i = 0
-    def lineEnd(from: Int): Int = {
-      var j = from
-      while (j < n && bytes(j) != '\n') j += 1
-      j
-    }
-    def flushTable(): Unit = if (curTable != null) {
-      tables += curTable.copy(structCells = curStruct.result(), detCells = curDet.result())
-      curTable = null; curStruct = Vector.newBuilder; curDet = Vector.newBuilder
-    }
-    def flushPage(): Unit = {
-      flushTable()
-      pages += PdfPage(pw, ph, boxes.result(), headers.result(), footers.result(),
-        titles.result(), figures.result(), tables.result(), formulas.result())
-      boxes = Vector.newBuilder; headers = Vector.newBuilder; footers = Vector.newBuilder
-      titles = Vector.newBuilder; figures = Vector.newBuilder; tables = Vector.newBuilder
-      formulas = Vector.newBuilder
-    }
-    // parse `k` doubles starting at p; returns (values, posAfter) or null
-    def parseNums(from: Int, e: Int, k: Int): (Array[Double], Int) = {
-      var p = from
-      val nums = new Array[Double](k)
-      var got = 0
-      while (got < k) {
-        // a number ending exactly at `e` leaves p = e+1; on the last line of
-        // the payload that is one past the buffer — a truncated line simply
-        // has too few numbers
-        if (p > e) return null
-        var q = p
-        while (q < e && bytes(q) != ' ') q += 1
-        val s = new String(bytes, p, q - p, java.nio.charset.StandardCharsets.US_ASCII)
-        s.toDoubleOption match {
-          case Some(d) => nums(got) = d; p = q + 1; got += 1
-          case None    => return null
-        }
-      }
-      (nums, p)
-    }
-    def textBox(from: Int, e: Int): TextBox = {
-      parseNums(from, e, 4) match {
-        case null => null
-        case (nums, p) if p <= e =>
-          val text = new String(bytes, p, e - p, java.nio.charset.StandardCharsets.UTF_8)
-          TextBox(Box(nums(0), nums(1), nums(0) + nums(2), nums(1) + nums(3)), text, p.toLong, e.toLong)
-        case _ => null
-      }
-    }
-    while (i < n) {
-      val e = lineEnd(i)
-      if (e > i + 1 && bytes(i + 1) == ' ') {
-        bytes(i) match {
-          case 'P' =>
-            if (inPage) flushPage()
-            val parts = new String(bytes, i + 2, e - i - 2, java.nio.charset.StandardCharsets.US_ASCII).split(' ')
-            pw = parts.headOption.flatMap(_.toDoubleOption).getOrElse(0.0)
-            ph = if (parts.length > 1) parts(1).toDoubleOption.getOrElse(0.0) else 0.0
-            inPage = true
-          case 'T' => val tb = textBox(i + 2, e); if (tb != null) boxes += tb
-          case 'H' => val tb = textBox(i + 2, e); if (tb != null) headers += tb
-          case 'F' => val tb = textBox(i + 2, e); if (tb != null) footers += tb
-          case 'G' => val tb = textBox(i + 2, e); if (tb != null) figures += tb
-          case 'M' => val tb = textBox(i + 2, e); if (tb != null) formulas += tb
-          case 'L' =>
-            parseNums(i + 2, e, 5) match {
-              case null => ()
-              case (nums, p) if p <= e =>
-                val text = new String(bytes, p, e - p, java.nio.charset.StandardCharsets.UTF_8)
-                val lvl = math.max(1, math.min(6, nums(4).toInt))
-                titles += TitleBox(lvl,
-                  TextBox(Box(nums(0), nums(1), nums(0) + nums(2), nums(1) + nums(3)), text, p.toLong, e.toLong))
-              case _ => ()
-            }
-          case 'R' =>
-            parseNums(i + 2, e, 6) match {
-              case null => ()
-              case (nums, _) =>
-                flushTable()
-                curTable = TableSpec(Box(nums(0), nums(1), nums(0) + nums(2), nums(1) + nums(3)),
-                  math.max(1, nums(4).toInt), math.max(1, nums(5).toInt), Vector.empty, Vector.empty)
-            }
-          case 'C' | 'D' =>
-            parseNums(i + 2, e, 4) match {
-              case null => ()
-              case (nums, _) if curTable != null =>
-                val box = Box(nums(0), nums(1), nums(0) + nums(2), nums(1) + nums(3))
-                if (bytes(i) == 'C') curStruct += box else curDet += box
-              case _ => ()
-            }
-          case _ => () // header / unknown line: skip
-        }
-      } else if (e == i + 1 && bytes(i) == 'E') {
-        // exactly the bare "E" marker line — a corrupt line that merely
-        // STARTS with 'E' must be skipped like any unknown line, not split
-        // the page (spurious page break + wrong block indices on every
-        // later span)
-        if (inPage) { flushPage(); inPage = false }
-      }
-      i = e + 1
-    }
-    if (inPage) flushPage()
-    pages.result()
-  }
 
   // ---- text-region grouping ------------------------------------------------
 
@@ -366,7 +198,7 @@ object PdfParser {
     * cell covers >= 0.6 of it (the reference's IoA coverage threshold) is
     * NOT split. Fragment byte offsets are UTF-8 prefix lengths inside the
     * original box's byte range — EXACT when that range IS the UTF-8
-    * encoding of the text (dialect pages; plain-ASCII real-PDF literals).
+    * encoding of the text (plain-ASCII real-PDF literals).
     * When it is not (escaped literals, WinAnsi high bytes, CID hex — the
     * range indexes raw or decoded-stream bytes where UTF-8 prefix math
     * does not apply), every fragment carries the PARENT's full byte range:
@@ -418,19 +250,13 @@ object PdfParser {
     if (res.isEmpty) Vector(tb) else res
   }
 
-  /** Assemble one table: merge double-fired detections (NMS-with-merge),
-    * reconcile structure/detected cells (k-means cluster of the text boxes
-    * stands in for structure when no cells are given), split text boxes that
-    * straddle cell boundaries, assign to cells by best IoU (center
-    * containment fallback), group cells into rows by center-y, render
-    * canonical HTML. Returns (html, consumed text boxes in cell order). */
+  /** Assemble one table: split text boxes that straddle cell boundaries,
+    * assign to cells by best IoU (center containment fallback), group cells
+    * into rows by center-y, render canonical HTML. Returns (html, consumed
+    * text boxes in cell order). */
   def assembleTable(spec: TableSpec, tBoxes0: Vector[TextBox]): (String, Vector[TextBox]) = {
     if (tBoxes0.isEmpty) return ("", Vector.empty)
-    val targetN = spec.rows * spec.cols
-    val struct: Vector[Box] =
-      if (spec.structCells.nonEmpty) spec.structCells
-      else Cells.combineRectanglesKmeans(tBoxes0.map(_.box), targetN)
-    val cells = Cells.reconcile(struct, Cells.nmsWithMerge(spec.detCells))
+    val cells = spec.cells
     val tBoxes = tBoxes0.flatMap(tb => splitAcrossCells(tb, cells))
     // assign text boxes to cells
     val byCell = Array.fill(cells.length)(Vector.newBuilder[TextBox])
@@ -484,25 +310,24 @@ object PdfParser {
 
   // ---- page render ---------------------------------------------------------
 
-  /** One page: enhanced layout order over headers/titles/figures/tables/text
-    * regions, each element rendered by its markdown rule, elements joined by
-    * "\n\n" (hard breaks inside a region become paragraph separators, the
-    * reference's default-text rule structure.rs:382-389). */
   /** per-class unclip ratio: table regions widen slightly so text straddling
     * the region boundary still assigns to the table (layout_postprocess.rs
     * unclip_boxes analogue; ratio order-of-magnitude per its defaults). */
   val TableUnclipRatio = 1.05
 
+  /** One page: enhanced layout order over titles/tables/text regions, each
+    * element rendered by its markdown rule, elements joined by "\n\n" (hard
+    * breaks inside a region become paragraph separators, the reference's
+    * default-text rule structure.rs:382-389). */
   def renderPage(page: PdfPage): (String, Vector[(Long, Long, String)]) = {
-    // A formula/table suppressed by the overlap rule is a RE-CLASSIFICATION,
-    // not a deletion: its diverted T boxes (consumed by mask-then-detect /
-    // cell assignment below) would otherwise vanish with it — a silent hole
-    // in the text, since those pools are disjoint from every region by
-    // construction (unlike figures/titles, whose drop is dedup of their own
-    // duplicated render). The page re-lays out without the demoted element
-    // so its boxes flow back into body regions; each round excludes at
-    // least one element, so the loop is bounded by the element count.
-    var exFormulas = Set.empty[Int]
+    // A table suppressed by the overlap rule is a RE-CLASSIFICATION, not a
+    // deletion: the T boxes diverted to it (cell assignment below) would
+    // otherwise vanish with it — a silent hole in the text, since a table's
+    // pool is disjoint from every region by construction (unlike titles,
+    // whose drop is dedup of their own duplicated render). The page
+    // re-lays out without the demoted table so its boxes flow back into
+    // body regions; each round excludes at least one table, so the loop is
+    // bounded by the table count.
     var exTables = Set.empty[Int]
     var tableBoxesR: Array[Vector[TextBox]] = null
     var elTable: Vector[PageEl] = null
@@ -512,74 +337,46 @@ object PdfParser {
       val tableBoxes = Array.fill(page.tables.length)(Vector.newBuilder[TextBox])
       val bodyBoxes = Vector.newBuilder[TextBox]
       val unclipped = page.tables.map(t => Geom.unclip(t.box, TableUnclipRatio, TableUnclipRatio))
-      // mask-then-detect (structure.rs:1981-1990): T boxes inside a formula
-      // region are the formula's own rendering — the recognized latex
-      // replaces them, so they are consumed, never grouped into body regions
       for (tb <- page.boxes) {
         val ti = unclipped.indices.find(i => !exTables.contains(i) && {
           val t = unclipped(i)
           tb.box.cx >= t.x1 && tb.box.cx <= t.x2 &&
             tb.box.cy >= t.y1 && tb.box.cy <= t.y2
         }).getOrElse(-1)
-        if (ti >= 0) tableBoxes(ti) += tb
-        else if (!page.formulas.zipWithIndex.exists { case (f, fi) =>
-          !exFormulas.contains(fi) &&
-            tb.box.cx >= f.box.x1 && tb.box.cx <= f.box.x2 &&
-            tb.box.cy >= f.box.y1 && tb.box.cy <= f.box.y2
-        }) bodyBoxes += tb
+        if (ti >= 0) tableBoxes(ti) += tb else bodyBoxes += tb
       }
       val regions = textRegions(bodyBoxes.result())
 
       // unified typed element table: every Sortable's payload is an index
       // into `els`, and the element's class travels as the PageEl tag (no
       // magic index ranges). Labels: text regions NormalText; titles level1
-      // DocTitle else ParaTitle; figures/formulas/tables Vision.
+      // DocTitle else ParaTitle; tables Vision.
       val els = Vector.newBuilder[PageEl]
       var nEls = 0
       def add(el: PageEl): Int = { els += el; nEls += 1; nEls - 1 }
       val regionEls = regions.map { r =>
         LayoutSort.Sortable(union(r), LayoutSort.NormalText, add(RegionEl(r)))
       }
-      val formulaElIdx = scala.collection.mutable.HashMap.empty[Int, Int] // el idx -> formula idx
-      val tableElIdx = scala.collection.mutable.HashMap.empty[Int, Int]   // el idx -> table idx
       val floating =
         page.titles.map { t =>
           LayoutSort.Sortable(t.tb.box,
             if (t.level == 1) LayoutSort.DocTitle else LayoutSort.ParaTitle, add(TitleEl(t)))
         } ++
-        page.figures.map { f =>
-          LayoutSort.Sortable(f.box, LayoutSort.Vision, add(FigureEl(f)))
-        } ++
-        page.formulas.zipWithIndex.collect { case (f, fi) if !exFormulas.contains(fi) =>
-          val el = add(FormulaEl(f)); formulaElIdx(el) = fi
-          LayoutSort.Sortable(f.box, LayoutSort.Vision, el)
-        } ++
         page.tables.zipWithIndex.collect { case (t, i) if !exTables.contains(i) =>
-          val el = add(TableEl(i)); tableElIdx(el) = i
-          LayoutSort.Sortable(t.box, LayoutSort.Vision, el)
+          LayoutSort.Sortable(t.box, LayoutSort.Vision, add(TableEl(i)))
         }
-      val headerEls = page.headers.map { h =>
-        LayoutSort.Sortable(h.box, LayoutSort.NormalText, add(HeaderEl(h)))
-      }
-      val footerEls = page.footers.map { f =>
-        LayoutSort.Sortable(f.box, LayoutSort.NormalText, add(FooterEl(f)))
-      }
       elTable = els.result()
       // duplicate-element suppression before ordering (text beats vision)
       val surviving = LayoutSort.removeOverlaps(regionEls ++ floating)
       val survivingIdx = surviving.map(_.payload).toSet
-      val demotedF = formulaElIdx.collect { case (el, fi) if !survivingIdx(el) => fi }
-      val demotedT = tableElIdx.collect { case (el, ti) if !survivingIdx(el) => ti }
-      if (demotedF.isEmpty && demotedT.isEmpty) {
+      val demoted = elTable.indices.filterNot(survivingIdx).map(elTable).collect { case TableEl(i) => i }
+      if (demoted.isEmpty) {
         stable = true
         tableBoxesR = tableBoxes.map(_.result())
         val (regionsKept, floatingKept) =
           surviving.partition(s => elTable(s.payload).isInstanceOf[RegionEl])
-        ordered = LayoutSort.enhancedOrder(headerEls, footerEls, regionsKept, floatingKept)
-      } else {
-        exFormulas ++= demotedF
-        exTables ++= demotedT
-      }
+        ordered = LayoutSort.enhancedOrder(regionsKept, floatingKept)
+      } else exTables ++= demoted
     }
 
     val pieces = Vector.newBuilder[String]
@@ -598,39 +395,22 @@ object PdfParser {
         val lvl = TitleLevel.resolve(t.tb.text, t.level)
         pieces += ("#" * lvl) + " " + t.tb.text
         offs += ((t.tb.beginByte, t.tb.endByte, fragKind(t.tb)))
-      case FigureEl(f) =>
-        pieces += s"![Figure](${f.text})"
-        offs += ((f.beginByte, f.endByte, fragKind(f)))
-      case FormulaEl(f) =>
-        // typed formula span: x05 counts formulas from THIS kind, never
-        // from a regex over the rendered text (body text may contain $$)
-        offs += ((f.beginByte, f.endByte, if (f.decoded) "pdf_formula_dec" else "pdf_formula"))
-        pieces += "$$" + normalizeLatex(f.text) + "$$"
       case TableEl(i) =>
         val (html, used) = assembleTable(page.tables(i), tableBoxesR(i))
         if (html.nonEmpty) {
           pieces += html
           for (tb <- used) offs += ((tb.beginByte, tb.endByte, fragKind(tb)))
         }
-      case HeaderEl(h) =>
-        pieces += s"<small>${h.text}</small>"
-        offs += ((h.beginByte, h.endByte, fragKind(h)))
-      case FooterEl(f) =>
-        pieces += s"<small>${f.text}</small>"
-        offs += ((f.beginByte, f.endByte, fragKind(f)))
     }
     (pieces.result().mkString("\n\n"), offs.result())
   }
 
-  /** Full payload: pages joined by the page break; spans carry kind
-    * pdf_fragment (pdf_formula for formula boxes; `_dec` suffix when offsets
-    * are in decoded-stream space) with blockIdx = page
-    * index. Real `%PDF-1.x` bytes go
-    * through [[RealPdf]] (which throws on unparseable input → error row);
-    * the synthetic dialect keeps its own parser. */
+  /** Full payload: [[RealPdf.parse]] (which throws on unreadable input →
+    * error row), each page rendered, pages joined by the page break; spans
+    * carry kind pdf_fragment (`_dec` suffix when offsets are in
+    * decoded-stream space) with blockIdx = page index. */
   def extract(bytes: Array[Byte]): (String, Array[Span]) = {
-    val pages =
-      if (RealPdf.isReal(bytes)) RealPdf.parse(bytes) else parsePayload(bytes)
+    val pages = RealPdf.parse(bytes)
     val texts = Vector.newBuilder[String]
     val spans = Array.newBuilder[Span]
     var pi = 0

@@ -9,9 +9,8 @@ import graft.pdf.PdfParser.{PdfPage, TableSpec, TextBox, TitleBox}
   * error on unparseable input, page-by-page render). We cannot raster+OCR in
   * this container, but uncompressed (and FlateDecode) text objects carry the
   * layout the reference recovers visually, so this parser recovers it
-  * symbolically and feeds the SAME downstream pipeline (region grouping,
-  * enhanced ordering, smart join) behind `PdfParser.parsePayload`'s
-  * interface.
+  * symbolically and feeds the downstream layout pipeline (region grouping,
+  * enhanced ordering, smart join) in `PdfParser` through its page model.
   *
   * Scope (documented, honest):
   *  - xref-less object scan with resync (tolerates truncated/patched files);
@@ -60,7 +59,7 @@ import graft.pdf.PdfParser.{PdfPage, TableSpec, TextBox, TitleBox}
   * delimiters excluded), keeping the raw-byte offset discipline; boxes from
   * compressed/encoded streams carry DECODED-space offsets — the byte range
   * of the literal inside the concatenation of the page's decoded content
-  * streams — flagged via span kind `pdf_fragment_dec`/`pdf_formula_dec`
+  * streams — flagged via span kind `pdf_fragment_dec`
   * (mirroring the `charset` column's coordinate-space contract for
   * transcoded HTML; re-decoding the streams and slicing reproduces the
   * literal's content bytes, asserted in RealPdfSpec).
@@ -94,21 +93,11 @@ object RealPdf {
     * per-row tensor-guard discipline, constants.rs max-side analogue). */
   val MaxRulings = 512
 
-  private val GraftMagic = "%PDF-GRAFT".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-
-  /** A real (non-dialect) PDF: `%PDF` magic not followed by the synthetic
-    * dialect tag. Anything `%PDF`-sniffed that is not the dialect is handed
-    * to this parser — and errors honestly if it cannot be read. */
-  def isReal(bytes: Array[Byte]): Boolean =
-    PdfParser.isPdf(bytes) && {
-      var i = 0
-      var graft = bytes.length >= GraftMagic.length
-      while (graft && i < GraftMagic.length) {
-        if (bytes(i) != GraftMagic(i)) graft = false
-        i += 1
-      }
-      !graft
-    }
+  /** Every `%PDF`-sniffed payload is handed to this parser, which errors
+    * honestly if it cannot read it. Kept as a one-line delegate because
+    * perfbench's `KernelPass` calls it and the benchmark's sources are not
+    * edited together with the engine. */
+  def isReal(bytes: Array[Byte]): Boolean = PdfParser.isPdf(bytes)
 
   // ---- object model --------------------------------------------------------
 
@@ -2052,8 +2041,7 @@ object RealPdf {
           val cells = Vector.newBuilder[Box]
           for (rj <- 0 until rows; ci <- 0 until cols)
             cells += Box(xs(ci), ys(rj), xs(ci + 1), ys(rj + 1))
-          out += TableSpec(Box(xs.head, ys.head, xs.last, ys.last), rows, cols,
-            cells.result(), Vector.empty)
+          out += TableSpec(Box(xs.head, ys.head, xs.last, ys.last), cells.result())
         }
       }
     }
@@ -2062,7 +2050,7 @@ object RealPdf {
 
   // ---- assembly ------------------------------------------------------------
 
-  /** Parse a real PDF into the dialect-shared page model, or throw
+  /** Parse a real PDF into `PdfParser`'s page model, or throw
     * [[PdfParseException]]. */
   def parse(bytes: Array[Byte]): Vector[PdfPage] = {
     val (objs0, order0, trailer) = scanObjects(bytes)
@@ -2176,9 +2164,8 @@ object RealPdf {
           throw new PdfParseException(
             s"decoded-space span [${r.beginByte},${r.endByte}) outside claimed total ${space.total}")
       val tables = detectRulingTables(rects.toVector, ph)
-      // font-size-derived titles: the real-PDF analogue of the dialect's L
-      // lines — a run much larger than the page's (lower-)median body size
-      // is a heading. A run inside a detected table grid is always cell
+      // font-size-derived titles: a run much larger than the page's
+      // (lower-)median body size is a heading. A run inside a detected table grid is always cell
       // content (a large-font header row must not escape its table).
       val titles = Vector.newBuilder[TitleBox]
       val body = Vector.newBuilder[TextBox]
@@ -2199,8 +2186,7 @@ object RealPdf {
           titles += TitleBox(if (r.size >= DocTitleSizeRatio * median) 1 else 2, tb)
         else body += tb
       }
-      pages += PdfPage(pw, ph, body.result(), Vector.empty, Vector.empty,
-        titles.result(), Vector.empty, tables, Vector.empty)
+      pages += PdfPage(pw, ph, body.result(), titles.result(), tables)
     }
     if (totalRuns == 0)
       throw new PdfParseException("real PDF: pages contain no text operators (image-only or filtered content)")

@@ -6,17 +6,18 @@ import org.apache.spark.sql.SparkSession
 import graft.model.Page
 import graft.spark.ExtractJob
 
-/** The 15 adversarial probe rows: empty, null html, garbage bytes, truncated
-  * PDF, html-less text, deep nesting, only boilerplate, and seven real-PDF
-  * rows that must each degrade cleanly.
+/** The 15 adversarial probe rows: empty, null html, garbage bytes, a
+  * truncated non-PDF-1.x `%PDF` payload, html-less text, deep nesting, only
+  * boilerplate, and seven real-PDF rows that must each degrade cleanly.
   *
   * Row-by-row contract (the honest-degradation contract):
-  *   - exactly 7 ERROR rows, each a `PdfParseException`: `pdf-empty`,
-  *     `realpdf-truncated`, `realpdf-no-text`, `realpdf-cid-no-tounicode`,
-  *     `realpdf-encrypted`, `realpdf-oversize`, `realpdf-pathological` — an
-  *     unparseable or undecodable PDF is an error row, never silent empty or
-  *     mojibake text;
-  *   - the other 8 rows have `error == ""`;
+  *   - exactly 8 ERROR rows, each a `PdfParseException`: `pdf-truncated`,
+  *     `pdf-empty`, `realpdf-truncated`, `realpdf-no-text`,
+  *     `realpdf-cid-no-tounicode`, `realpdf-encrypted`, `realpdf-oversize`,
+  *     `realpdf-pathological` — every `%PDF`-sniffed payload goes to the
+  *     real-PDF parser, and an unparseable or undecodable PDF is an error
+  *     row, never silent empty or mojibake text;
+  *   - the other 7 rows have `error == ""`;
   *   - every row finishes within `RowWallBoundMs`;
   *   - a throw that kills a task (rather than an error row) is a bug either
   *     way: the 14 rows other than the 64 MB `realpdf-oversize` also run once
@@ -32,7 +33,7 @@ class ExtractorProbeSpec extends AnyFunSuite {
     * (quadratic scan, resync loop) trips it. */
   private val RowWallBoundMs = 10000L
 
-  private val ErrorRows = Set("pdf-empty", "realpdf-truncated", "realpdf-no-text",
+  private val ErrorRows = Set("pdf-truncated", "pdf-empty", "realpdf-truncated", "realpdf-no-text",
     "realpdf-cid-no-tounicode", "realpdf-encrypted", "realpdf-oversize", "realpdf-pathological")
 
   private val probes: Seq[Page] = Seq(

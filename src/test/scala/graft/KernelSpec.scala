@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.html._
 import graft.assemble.{TitleLevel, JoinRules}
-import graft.geom.{Box, XYCut}
+import graft.geom.Box
 import graft.score.Classifier
 import graft.model.Page
 import graft.Extractor
@@ -101,29 +101,6 @@ class KernelSpec extends AnyFunSuite {
     assert(json.count(_ == '{') == json.count(_ == '}'))
   }
 
-  test("cell reconcile: fill, exact match, and compress merge") {
-    import graft.geom.{Box, Cells}
-    val struct = Vector(Box(0, 0, 10, 10), Box(10, 0, 20, 10), Box(20, 0, 30, 10))
-    // no detections: fill keeps structure boxes
-    assert(Cells.reconcile(struct, Vector.empty) == struct)
-    // one precise detection per structure cell: detected geometry wins
-    val det = Vector(Box(0.5, 0.2, 9.5, 9.8), Box(10.5, 0.1, 19.5, 9.9))
-    val rec = Cells.reconcile(struct, det)
-    assert(rec(0) == det(0) && rec(1) == det(1) && rec(2) == struct(2))
-    // two detections inside one structure cell: union merge (compress)
-    val det2 = Vector(Box(1, 1, 5, 9), Box(6, 1, 9, 9))
-    val rec2 = Cells.reconcile(Vector(Box(0, 0, 10, 10)), det2)
-    assert(rec2 == Vector(Box(1, 1, 9, 9)))
-  }
-
-  test("kmeans rectangle combine: clusters well-separated boxes; identity when target >= n") {
-    import graft.geom.{Box, Cells}
-    val rects = Vector(Box(0, 0, 4, 4), Box(5, 0, 9, 4), Box(100, 0, 104, 4), Box(105, 0, 109, 4))
-    assert(Cells.combineRectanglesKmeans(rects, 4) == rects)
-    val two = Cells.combineRectanglesKmeans(rects, 2)
-    assert(two.toSet == Set(Box(0, 0, 9, 4), Box(100, 0, 109, 4)))
-  }
-
   test("sort-and-join: same-line tolerance joins with space (reference test vector)") {
     import graft.geom.Box
     import graft.pdf.PdfParser.{TextBox, sortAndJoin}
@@ -201,13 +178,8 @@ class KernelSpec extends AnyFunSuite {
     assert(out == Vector(0, 3, 4))
   }
 
-  test("nms-with-merge unions double-fired detections; cross-cell boxes split proportionally") {
-    import graft.geom.{Box, Cells}
+  test("cross-cell boxes split proportionally; non-UTF-8 ranges get the covering span") {
     import graft.pdf.PdfParser.{TextBox, splitAcrossCells}
-    // two detections on one cell merge; the distinct cell survives alone
-    val merged = Cells.nmsWithMerge(Vector(
-      Box(0, 0, 10, 10), Box(1, 1, 11, 10), Box(50, 0, 60, 10)))
-    assert(merged == Vector(Box(0, 0, 11, 10), Box(50, 0, 60, 10)))
     // a box spanning two cells evenly splits its text at the midpoint, with
     // exact per-fragment byte offsets
     val cells = Vector(Box(0, 0, 50, 20), Box(50, 0, 100, 20))
@@ -235,27 +207,8 @@ class KernelSpec extends AnyFunSuite {
     val r2 = Sortable(Box(10, 300, 590, 380), NormalText, 1)
     val doc = Sortable(Box(10, 40, 590, 56), DocTitle, 2)
     val fig = Sortable(Box(10, 210, 590, 270), Vision, 3)
-    val hdr = Sortable(Box(10, 8, 590, 18), NormalText, 4)
-    val ftr = Sortable(Box(10, 780, 590, 792), NormalText, 5)
-    val out = LayoutSort.enhancedOrder(Vector(hdr), Vector(ftr), Vector(r1, r2), Vector(doc, fig))
-    assert(out.map(_.payload) == Vector(4, 2, 0, 3, 1, 5))
-  }
-
-  test("polygon kernels: convex hull, min-area rect, douglas-peucker") {
-    import graft.geom.Poly
-    val square = Vector((0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0), (5.0, 5.0))
-    val hull = Poly.convexHull(square)
-    assert(hull.toSet == Set((0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)))
-    val (cx, cy, w, h, _) = Poly.minAreaRect(square)
-    assert(math.abs(cx - 5) < 1e-9 && math.abs(cy - 5) < 1e-9)
-    assert(math.abs(w * h - 100) < 1e-6)
-    // rotated rectangle: min-area rect recovers the tilted extent, area < aabb area
-    val rot = Vector((0.0, 0.0), (8.0, 6.0), (5.0, 10.0), (-3.0, 4.0))
-    val (_, _, rw, rh, ang) = Poly.minAreaRect(rot)
-    assert(math.abs(rw * rh - 50.0) < 1e-6, s"area ${rw * rh}")
-    assert(ang > 0 && ang < 90)
-    val line = Vector((0.0, 0.0), (1.0, 0.05), (2.0, -0.04), (3.0, 0.0), (4.0, 5.0))
-    assert(Poly.douglasPeucker(line, 0.5) == Vector((0.0, 0.0), (3.0, 0.0), (4.0, 5.0)))
+    val out = LayoutSort.enhancedOrder(Vector(r1, r2), Vector(doc, fig))
+    assert(out.map(_.payload) == Vector(2, 0, 3, 1))
   }
 
   test("tokenizer: comments, doctype, PI skipped; literal < kept") {
@@ -305,33 +258,31 @@ class KernelSpec extends AnyFunSuite {
     assert(sortAndJoin(Vector(j2, j1), Box(0, 0, 62, 15))._1 == "big text")
   }
 
-  test("pdf: a formula suppressed by the overlap rule demotes to body text, never vanishes") {
-    import graft.geom.Box
+  test("pdf: a table suppressed by the overlap rule demotes to body text, never vanishes") {
     import graft.pdf.PdfParser
-    import graft.pdf.PdfParser.{PdfPage, TextBox}
-    // a low formula box sits INSIDE a paragraph's line stack: the lines
-    // above and below form one region whose union covers the formula, so
-    // the IoA text-priority rule suppresses the Vision element — its masked
-    // inner box must then render as body text, not disappear
+    import graft.pdf.PdfParser.{PdfPage, TableSpec, TextBox}
+    // a small table box sits INSIDE a paragraph's line stack: the lines
+    // above and below form one region whose union covers the table, so the
+    // IoA text-priority rule suppresses the Vision element — the text box
+    // assigned to its cells must then render as body text, not disappear
     val lines = Vector(
-      TextBox(Box(10, 10, 200, 22), "line above the formula", 0, 5),
-      TextBox(Box(10, 34, 200, 46), "line below the formula", 10, 15))
-    val inner = TextBox(Box(60, 25, 150, 31), "x equals y", 20, 25)
-    val formula = TextBox(Box(55, 24, 155, 32), "x = y", 20, 25)
-    val page = PdfPage(600, 800, lines :+ inner,
-      Vector.empty, Vector.empty, Vector.empty, Vector.empty,
-      Vector.empty, Vector(formula))
-    val (txt, offs) = PdfParser.renderPage(page)
-    assert(txt.contains("x equals y"), txt) // the masked box's text survives
-    assert(!txt.contains("$$"), txt)        // the demoted formula is not rendered
-    assert(offs.exists(o => o._1 == 20 && o._3 == "pdf_fragment"), offs.toString)
-    // control: a formula clear of any region still renders as $$..$$
-    val clear = PdfPage(600, 800, lines,
-      Vector.empty, Vector.empty, Vector.empty, Vector.empty,
-      Vector.empty, Vector(TextBox(Box(10, 300, 200, 320), "a+b", 30, 33)))
-    val (txt2, offs2) = PdfParser.renderPage(clear)
-    assert(txt2.contains("$$a+b$$"), txt2)
-    assert(offs2.exists(_._3 == "pdf_formula"), offs2.toString)
+      TextBox(Box(10, 10, 200, 22), "line above the table", 0, 5),
+      TextBox(Box(10, 34, 200, 46), "line below the table", 10, 15))
+    val inner = TextBox(Box(60, 25, 150, 31), "cell words", 20, 25)
+    val table = TableSpec(Box(55, 24, 155, 32),
+      Vector(Box(55, 24, 105, 32), Box(105, 24, 155, 32)))
+    val (txt, offs) = PdfParser.renderPage(PdfPage(600, 800, lines :+ inner, Vector.empty, Vector(table)))
+    assert(txt == "line above the table cell words line below the table", txt)
+    assert(offs.map(_._1).sorted == Vector(0L, 10L, 20L), offs.toString)
+    assert(offs.forall(_._3 == "pdf_fragment"), offs.toString)
+    // control: a table clear of any region renders as a table of its cells
+    val cellA = TextBox(Box(14, 306, 60, 318), "alpha", 30, 35)
+    val cellB = TextBox(Box(114, 306, 160, 318), "beta", 40, 44)
+    val clear = TableSpec(Box(10, 300, 210, 324),
+      Vector(Box(10, 300, 110, 324), Box(110, 300, 210, 324)))
+    val (txt2, offs2) = PdfParser.renderPage(PdfPage(600, 800, lines :+ cellA :+ cellB, Vector.empty, Vector(clear)))
+    assert(txt2.contains("<table") && txt2.contains("alpha") && txt2.contains("beta"), txt2)
+    assert(offs2.map(_._1).sorted == Vector(0L, 10L, 30L, 40L), offs2.toString)
   }
 
   test("charset: only meta tags declare; a URL query string cannot hijack") {
@@ -516,21 +467,6 @@ class KernelSpec extends AnyFunSuite {
     Array(0xff.toByte, 0xfe.toByte) ++ s.getBytes(java.nio.charset.StandardCharsets.UTF_16LE)
   }
 
-  test("xycut: two columns read column-major, lines top-down") {
-    // col1: (0..80), col2: (200..280); two lines each
-    val boxes = Array(
-      Box(200, 40, 280, 52), // c2 l1
-      Box(0, 40, 80, 52),    // c1 l1
-      Box(0, 62, 80, 74),    // c1 l2
-      Box(200, 62, 280, 74)) // c2 l2
-    assert(XYCut.readingOrder(boxes).toSeq == Seq(1, 2, 0, 3))
-  }
-
-  test("xycut: same line ordered left-to-right regardless of input order") {
-    val boxes = Array(Box(50, 10, 80, 22), Box(0, 11, 40, 23), Box(90, 9, 120, 21))
-    assert(XYCut.readingOrder(boxes).toSeq == Seq(1, 0, 2))
-  }
-
   test("malformed html: unclosed tags and stray end tags survive") {
     val bs = blocksOf("<p><b>unclosed bold content words</p><p>second paragraph words here</span></p>")
     assert(bs.map(_.text) == Vector("unclosed bold content words", "second paragraph words here"))
@@ -550,58 +486,6 @@ class KernelSpec extends AnyFunSuite {
     val tbl = bs.filter(_.kind == "table")
     assert(tbl.nonEmpty)
     assert(tbl.forall(b => b.beginByte <= b.endByte), tbl.map(b => (b.beginByte, b.endByte)))
-  }
-
-  test("dialect pdf: truncated trailing line is skipped, not a parse crash") {
-    // a number ending exactly at end-of-input left the scan one past the
-    // buffer (StringIndexOutOfBounds; found by FuzzCampaign --html on
-    // mutated dialect rows) — too-few-numbers lines are simply skipped
-    val payload = "%PDF-GRAFT v2\nP 612.0 792.0\nT 10 20 30".getBytes(StandardCharsets.UTF_8)
-    val (text, spans) = graft.pdf.PdfParser.extract(payload)
-    assert(text == "", text)
-    assert(spans.isEmpty)
-  }
-
-  test("pdf formula: latex normalization collapses whitespace runs, trims ends") {
-    import graft.pdf.PdfParser.normalizeLatex
-    assert(normalizeLatex("E_{3}  =\t m c^2 ") == "E_{3} = m c^2")
-    assert(normalizeLatex("  \n x \n ") == "x")
-    assert(normalizeLatex("") == "")
-    assert(normalizeLatex("a+b") == "a+b")
-  }
-
-  test("pdf formula: M box renders $$..$$ and masks OCR fragments inside it") {
-    // mask-then-detect (reference structure.rs:1981-1990): the T fragment
-    // centered inside the M box is the formula's own rendering — consumed,
-    // never a body region; the outside T still becomes body text
-    val payload = ("%PDF-GRAFT v2\n" +
-      "P 612.0 792.0\n" +
-      "M 10.0 100.0 580.0 40.0 E  =\t m  c^2\n" +
-      "T 30.0 114.0 80.0 12.0 maskedfrag\n" +
-      "T 10.0 300.0 300.0 12.0 body text stays\n").getBytes(StandardCharsets.UTF_8)
-    val (text, spans) = graft.pdf.PdfParser.extract(payload)
-    assert(text.contains("$$E = m c^2$$"), text)
-    assert(!text.contains("maskedfrag"), text)
-    assert(text.contains("body text stays"), text)
-    // spans: exactly the formula box bytes + the surviving body box bytes
-    val spanned = spans.map(s => new String(payload, s.beginByte.toInt,
-      (s.endByte - s.beginByte).toInt, StandardCharsets.UTF_8)).toSet
-    assert(spanned == Set("E  =\t m  c^2", "body text stays"), spanned)
-  }
-
-  test("pdf formula count is typed: literal $$ in body text never counts as a formula") {
-    // one M formula + a body line containing literal $$ markers: the span
-    // surface must carry exactly ONE pdf_formula span (a regex over the
-    // rendered text would see 2 extra $$ and miscount)
-    val payload = ("%PDF-GRAFT v2\n" +
-      "P 612.0 792.0\n" +
-      "M 10.0 100.0 580.0 40.0 x + y\n" +
-      "T 10.0 300.0 300.0 12.0 price is $$ and more $$ here\n").getBytes(StandardCharsets.UTF_8)
-    val (text, spans) = graft.pdf.PdfParser.extract(payload)
-    assert(text.contains("$$x + y$$"), text)
-    assert(text.contains("price is $$ and more $$ here"), text)
-    assert(spans.count(_.kind == "pdf_formula") == 1, spans.map(_.kind).toSeq)
-    assert(spans.count(_.kind == "pdf_fragment") == 1, spans.map(_.kind).toSeq)
   }
 
   // ---- round 5: stable-branch review fixes ----------------------------------
@@ -674,27 +558,5 @@ class KernelSpec extends AnyFunSuite {
         "<tr><td>1</td><td>2</td></tr><tr><td>3</td><td>4</td></tr></table>"
     val p = Page("u", new java.sql.Timestamp(0L), html.getBytes(StandardCharsets.UTF_8), "", "en")
     assert(Extractor.debugTables(p).nonEmpty)
-  }
-
-  test("minAreaRect: folding the angle by 90 swaps w/h so the triple stays consistent") {
-    import graft.geom.Poly
-    // 10x2 rectangle whose LONG side points at 100 degrees
-    val th = math.toRadians(100.0)
-    val (ux, uy) = (math.cos(th), math.sin(th))   // long axis
-    val (vx, vy) = (-uy, ux)                       // short axis
-    val pts = Vector(
-      (5 * ux + 1 * vx, 5 * uy + 1 * vy), (5 * ux - 1 * vx, 5 * uy - 1 * vy),
-      (-5 * ux + 1 * vx, -5 * uy + 1 * vy), (-5 * ux - 1 * vx, -5 * uy - 1 * vy))
-    val (cx, cy, w, h, ang) = Poly.minAreaRect(pts)
-    assert(math.abs(cx) < 1e-9 && math.abs(cy) < 1e-9)
-    assert(ang >= 0 && ang < 90, s"angle $ang")
-    // reconstruct: extent along the reported angle axis must equal the
-    // reported w; along its normal the reported h
-    val ra = math.toRadians(ang)
-    val (wx, wy) = (math.cos(ra), math.sin(ra))
-    val us = pts.map { case (px, py) => px * wx + py * wy }
-    val vs = pts.map { case (px, py) => -px * wy + py * wx }
-    assert(math.abs((us.max - us.min) - w) < 1e-6, s"w $w vs ${us.max - us.min}")
-    assert(math.abs((vs.max - vs.min) - h) < 1e-6, s"h $h vs ${vs.max - vs.min}")
   }
 }

@@ -30,10 +30,15 @@ class RealPdfSpec extends AnyFunSuite {
     sb.toString.getBytes(ISO_8859_1)
   }
 
-  test("isReal: real %PDF-1.x yes; synthetic dialect and non-PDF no") {
+  test("isReal: every %PDF payload goes to the real parser; unreadable is an error row") {
     assert(RealPdf.isReal("%PDF-1.7\nstuff".getBytes(ISO_8859_1)))
-    assert(!RealPdf.isReal("%PDF-GRAFT 1\nP 600".getBytes(ISO_8859_1)))
     assert(!RealPdf.isReal("<html></html>".getBytes(ISO_8859_1)))
+    // the retired positioned-box dialect is not a PDF the parser can read
+    val dialect = "%PDF-GRAFT 1\nP 600".getBytes(ISO_8859_1)
+    assert(RealPdf.isReal(dialect))
+    val got = Extractor.extract(Page("t://dialect", ts, dialect, "", "en"))
+    assert(got.error.contains("PdfParseException"), got.error)
+    assert(got.text == "")
   }
 
   test("indirect-array /Contents (spec 7.7.3.3) extracts both chained streams") {

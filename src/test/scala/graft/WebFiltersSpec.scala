@@ -104,6 +104,20 @@ class WebFiltersSpec extends AnyFunSuite {
     }
   }
 
+  test("blocklist: input columns with reserved output names are rejected") {
+    import spark.implicits._
+    val bls = bl.toDF("host", "category")
+    for (reserved <- Seq("block_category", "blocked", "_bl_host_0", "_bl_cat_7")) {
+      val in = Seq((0L, "bad.example.com", 0)).toDF("doc_id", "host", reserved)
+      val e = intercept[IllegalArgumentException](WebFilters.blocklistFilter(in, bls))
+      assert(e.getMessage.contains(s"'$reserved'"), e.getMessage)
+    }
+    // a name that only resembles a reserved one passes through untouched
+    val ok = WebFilters.blocklistFilter(
+      Seq((0L, "bad.example.com", 5)).toDF("doc_id", "host", "blocked_by"), bls)
+    assert(ok.select("blocked_by", "blocked").as[(Int, Int)].collect().toSeq == Seq((5, 1)))
+  }
+
   private def fix(rows: Seq[(Long, String)]): Map[Long, (Long, Long, Int, String)] = {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
