@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   * is sampled around every round and recorded inline so the artifact is
   * self-describing about host conditions.
   *
+  * Every x-query times its own fixture generation and extraction: no query
+  * reads another query's cache, and the cache each query leaves is cleared
+  * (outside the timer) before the next one starts.
+  *
   * A query that throws records "err" (and its exception class) instead of a
   * bogus fast wall-time — a broken query must be visible in the artifact.
   *
@@ -98,9 +102,9 @@ object Bench {
             roundTotal += (System.nanoTime() - t0) / 1e9
             errors(name) = e.getClass.getSimpleName
         } finally {
-          // release builder-owned materialized pair sets (d04/d05/d07/d15)
+          // release every result and intermediate the query persisted,
           // outside the timed window — rounds must not accumulate caches
-          SparkEntry.releaseOwnedCaches()
+          spark.catalog.clearCache()
         }
       }
       roundTotals += roundTotal

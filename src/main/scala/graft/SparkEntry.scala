@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.model.Page
-import graft.spark.ExtractJob
+import graft.spark.{ExtractJob, ExtractMain}
 import graft.ops.{Dedup, Similarity, TextOps}
 
 /** Driver contract — one `queries` entry per implemented operator
@@ -15,8 +15,6 @@ import graft.ops.{Dedup, Similarity, TextOps}
   * table so they scale with sf.
   */
 object SparkEntry {
-
-  private val x13Counter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
@@ -41,72 +39,33 @@ object SparkEntry {
   private def cust(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/customer.parquet")
 
-  /** documents row count per (session, dir), cached — several queries scale
-    * their synthetic inputs by it and a count() is a full Spark job. */
-  private val docCountCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]
+  /** Answered from the parquet footers; several queries scale their
+    * synthetic inputs by it. */
   private def docCount(spark: SparkSession, dir: String): Long =
-    docCountCache.getOrElseUpdate((spark, dir), docs(spark, dir).count())
+    docs(spark, dir).count()
 
   /** Deterministic fixture pages, 4x the documents row count of the sf. */
-  private def fixturePages(spark: SparkSession, dir: String): Dataset[Page] = {
-    import spark.implicits._
-    val n = docCount(spark, dir) * 4
-    spark.range(n).as[Long]
-      .mapPartitions(_.map(i => fixtures.FixtureGen.fixture(i).page))
-  }
+  private def fixturePages(spark: SparkSession, dir: String): Dataset[Page] =
+    ExtractMain.pagesFor(spark, s"fixture:${docCount(spark, dir) * 4}")
 
-  /** One extraction per (session, sf dir), persisted: the x-queries are many
-    * consumers of a single pipeline pass (html is projected away before the
-    * cache, so only extracted columns are stored). */
-  private val extractedCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Dataset[graft.model.ExtractedPage]]
+  /** The fixture corpus through the extraction pipeline. Not persisted: each
+    * x-query that reads it runs (and times) its own extraction. */
   private def extracted(spark: SparkSession, dir: String) =
-    extractedCache.getOrElseUpdate((spark, dir),
-      ExtractJob.run(fixturePages(spark, dir)).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    ExtractJob.run(fixturePages(spark, dir))
 
-  /** Pair sets materialized-and-persisted by a query builder invocation
-    * (d04/d05/d07/d15): registered here so harness loops (Bench rounds, long
-    * sessions) can release them — without this, every invocation left one
-    * persisted result DataFrame behind forever. The long-lived shared caches
-    * above (extraction, blocks) are NOT registered: they are meant to
-    * survive across queries. */
-  private val ownedCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private def owned(df: DataFrame): DataFrame = ownedCaches.synchronized {
-    ownedCaches += df
-    df
+  /** (url, block) rows — the detection-stage debug surface of x03/x06/x11. */
+  private def blocks(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    fixturePages(spark, dir)
+      .flatMap(p => Extractor.debugBlocks(p).map(b => (p.url, b)))
+      .toDF("url", "block")
   }
-
-  /** Unpersist every builder-owned materialized pair set registered since the
-    * last call. Call between bench rounds / after consuming d04/d05/d07/d15
-    * results in a long-lived session. */
-  def releaseOwnedCaches(): Unit = ownedCaches.synchronized {
-    ownedCaches.foreach(_.unpersist(false))
-    ownedCaches.clear()
-  }
-
-  /** Cached (url, block) rows — the detection-stage debug surface shared by
-    * x03/x06. */
-  private val blocksCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
-  private def blocks(spark: SparkSession, dir: String): DataFrame =
-    blocksCache.getOrElseUpdate((spark, dir), {
-      import spark.implicits._
-      fixturePages(spark, dir)
-        .flatMap(p => Extractor.debugBlocks(p).map(b => (p.url, b)))
-        .toDF("url", "block")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
 
   /** Flagship: full extraction pipeline on the smoke corpus. */
-  def entry(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val pages = spark.range(200).as[Long]
-      .mapPartitions(_.map(i => fixtures.FixtureGen.fixture(i).page))
-    ExtractJob.run(pages)
+  def entry(spark: SparkSession): DataFrame =
+    ExtractJob.run(ExtractMain.pagesFor(spark, "fixture:200"))
       .select(col("url"), col("lang"), col("isPdf"),
         length(col("text")).as("text_len"), size(col("spans")).as("n_spans"))
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- extraction pipeline (golden-oracle'd in sbt test; rows-only here) --
@@ -211,8 +170,9 @@ object SparkEntry {
     // planted-truth witness pattern (d26/d28) extended to the media family.
     "m03_media_witness" -> ((s, d) => {
       import s.implicits._
-      val n = docCount(s, d) * 2
-      s.range(n).as[Long]
+      // two media ids per document, doc_id*2 and doc_id*2+1, as in the oracle
+      docs(s, d).select(explode(array(col("doc_id").cast("long") * 2,
+          col("doc_id").cast("long") * 2 + 1))).as[Long]
         .map(id => (id, fixtures.FixtureGen.mediaWitness(id)))
         .toDF("media_id", "payload")
         .transform(df => ops.Multimodal.mediaMetaDF(s, df))
@@ -236,9 +196,9 @@ object SparkEntry {
       Similarity.bruteForceTopK(emb(s, d), 0L until 10L, k = 10)
         .select(col("query_id"), col("neighbor_id"), col("rank").cast("int").as("rank"))),
     "d04_embed_neardup" -> ((s, d) =>
-      owned(Similarity.nearDupPairs(emb(s, d), 0.45))),
+      Similarity.nearDupPairs(emb(s, d), 0.45)),
     "d05_minhash" -> ((s, d) => {
-      val pairs = owned(Dedup.minhashPairs(s, docs(s, d), threshold = 0.7))
+      val pairs = Dedup.minhashPairs(s, docs(s, d), threshold = 0.7)
       val perDoc = pairs.select(col("doc_a").as("doc_id"))
         .union(pairs.select(col("doc_b").as("doc_id")))
         .groupBy("doc_id").agg(count(lit(1)).as("n_neardups"))
@@ -263,7 +223,7 @@ object SparkEntry {
           coalesce(col("n_neardups"), lit(0L)).as("n_neardups"))
     }),
     "d07_ngram_jaccard" -> ((s, d) => {
-      val pairs = owned(Dedup.ngramJaccardPairs(s, docs(s, d), threshold = 0.5))
+      val pairs = Dedup.ngramJaccardPairs(s, docs(s, d), threshold = 0.5)
       val perDoc = pairs.select(col("doc_a").as("doc_id"))
         .union(pairs.select(col("doc_b").as("doc_id")))
         .groupBy("doc_id").agg(count(lit(1)).as("n_neardups"))
@@ -383,7 +343,7 @@ object SparkEntry {
       val pairs = docs(s, d).select(col("doc_id"))
         .filter(col("doc_id") % 10 < 3 && col("doc_id") + 1 < n)
         .select(col("doc_id").as("doc_a"), (col("doc_id") + 1).as("doc_b"))
-      owned(Dedup.connectedComponents(docs(s, d), pairs)).orderBy("doc_id")
+      Dedup.connectedComponents(docs(s, d), pairs).orderBy("doc_id")
     }),
     // d25: Unicode NFC normalization (native codegen'd expression, oracled
     // by DuckDB nfc_normalize). The corpus may already be NFC, so the query
@@ -476,7 +436,7 @@ object SparkEntry {
     // oracle reproduces every weight bit-exactly).
     "d38_dsir_weights" -> ((s, d) => {
       val all = docs(s, d)
-      owned(ops.Sampling.dsirWeights(all, all.filter(col("doc_id") % 7 === 0)))
+      ops.Sampling.dsirWeights(all, all.filter(col("doc_id") % 7 === 0))
         .orderBy("doc_id")
     }),
     // d39: DSIR end-to-end — Gumbel-top-k resampling over the d38 weights
@@ -486,7 +446,7 @@ object SparkEntry {
     // global sort.
     "d39_dsir_sample" -> ((s, d) => {
       val all = docs(s, d)
-      val w = owned(ops.Sampling.dsirWeights(all, all.filter(col("doc_id") % 7 === 0)))
+      val w = ops.Sampling.dsirWeights(all, all.filter(col("doc_id") % 7 === 0))
       ops.Sampling.gumbelTopK(w, k = 100)
         .orderBy(col("key_micros").desc, col("doc_id"))
     }),
@@ -496,7 +456,7 @@ object SparkEntry {
     // quality gate "keep the low-ppl head/middle" is one filter away.
     "d40_unigram_ppl" -> ((s, d) => {
       val all = docs(s, d)
-      owned(ops.Sampling.unigramNll(all, all)).orderBy("doc_id")
+      ops.Sampling.unigramNll(all, all).orderBy("doc_id")
     }),
     // d41: SemDeDup (Abbas et al. 2023) — semantic dedup over the d36/d37
     // 16-dim witness slice with the same 8 deterministic centroids d37
@@ -508,8 +468,8 @@ object SparkEntry {
     // literals, recursive-CTE components, row_number keep rule) reproduces
     // (cell, component, keep) bit-exactly.
     "d41_semdedup" -> ((s, d) =>
-      owned(Similarity.semDedup(raggedSlice16(s, d),
-          Similarity.planesFor(16, 8, 7L), threshold = 0.7))
+      Similarity.semDedup(raggedSlice16(s, d),
+          Similarity.planesFor(16, 8, 7L), threshold = 0.7)
         .orderBy("vec_id")),
     // d43: top-k corpus vocabulary — the tokenizer-training audit pass:
     // token-keyed aggregate (vocabulary-sized exchange, map-side combine)
@@ -572,14 +532,14 @@ object SparkEntry {
     // occurrence; a token is dropped iff any non-owner duplicated window
     // covers it. Output is the cleaned normalized-token stream.
     "d42_dup_removal" -> ((s, d) =>
-      owned(Dedup.removeDupWindows(docs(s, d), n = 8)).orderBy("doc_id")),
+      Dedup.removeDupWindows(docs(s, d), n = 8).orderBy("doc_id")),
     // d27: duplicate-window stats — the counting pass of exact substring
     // dedup (Lee et al. 2022): sliding 8-token windows flagged when their
     // gram occurs >= 2 times corpus-wide (n=8 because the synthetic docs
     // are short; production uses ~50). At sf0.01 this yields a spread:
     // ~47 docs with duplicated windows, the exact-dup pairs at 100%.
     "d27_dup_windows" -> ((s, d) =>
-      owned(Dedup.dupWindowStats(docs(s, d), n = 8)).orderBy("doc_id")),
+      Dedup.dupWindowStats(docs(s, d), n = 8).orderBy("doc_id")),
     // d28: minhash ORACLE WITNESS — signature position j = min over char-5
     // shingles of md5("j:"+shingle), replicated exactly in DuckDB. Pins the
     // min-over-hash-family semantics the production d05 path (JVM affine
@@ -618,7 +578,7 @@ object SparkEntry {
     "d15_neardup_lsh" -> ((s, d) => {
       // the 1e12-row near-dup path: LSH OR-construction candidates + exact
       // cosine verify (no O(n^2) product anywhere)
-      val pairs = owned(Similarity.nearDupPairsLsh(emb(s, d), 0.45, dim = 64))
+      val pairs = Similarity.nearDupPairsLsh(emb(s, d), 0.45, dim = 64)
       val perVec = pairs.select(col("id_a").as("vec_id"))
         .union(pairs.select(col("id_b").as("vec_id")))
         .groupBy("vec_id").agg(count(lit(1)).as("n_neardups"))
@@ -639,7 +599,7 @@ object SparkEntry {
         org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
       val n = math.min(docCount(s, d), 500L)
       stream.addData(0L until n)
-      val sink = "x13_sink_" + x13Counter.incrementAndGet()
+      val sink = "x13_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val pages = stream.toDS().map(i => fixtures.FixtureGen.fixture(i).page)
       val q = ExtractJob.run(pages)
         .select(col("url"), length(col("text")).as("text_len"),
@@ -648,7 +608,9 @@ object SparkEntry {
         .outputMode("append").start()
       try q.processAllAvailable()
       finally q.stop() // never leak a running StreamingQuery on failure
-      s.table(sink).orderBy("url")
+      // the returned frame holds the resolved sink plan; dropping the view
+      // leaves no session state behind once the caller lets go of it
+      try s.table(sink).orderBy("url") finally s.catalog.dropTempView(sink)
     }),
     "x14_stream_dedup" -> ((s, d) => {
       // streaming stateful dedup (flatMapGroupsWithState) through the driver
@@ -661,7 +623,7 @@ object SparkEntry {
       val stream =
         org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
       val n = math.min(docCount(s, d), 300L)
-      val sink = "x14_sink_" + x13Counter.incrementAndGet()
+      val sink = "x14_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val pages = stream.toDS().map(i => fixtures.FixtureGen.fixture(i).page)
       val q = graft.streaming.StreamExtract
         .dedupStream(ExtractJob.run(pages))
@@ -674,7 +636,7 @@ object SparkEntry {
         stream.addData((0L until n) ++ (n until n + 50L)) // dups + fresh
         q.processAllAvailable()
       } finally q.stop()
-      s.table(sink).orderBy("url")
+      try s.table(sink).orderBy("url") finally s.catalog.dropTempView(sink)
     }),
 
     "x15_curation" -> ((s, d) => {
@@ -687,25 +649,28 @@ object SparkEntry {
       // hash split. Fixture corpus, so rows-only at the driver; every stage
       // is individually oracled/golden-gated elsewhere (x01, d02/x08, d27,
       // d19, d20).
+      // ex is read twice (the exact-dedup aggregate and the semi-join):
+      // persisted so the query extracts its pages once
       val ex = extracted(s, d)
         .filter(col("error") === "" && length(col("text")) > 0).toDF()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val canon = Dedup.exact(ex, "text", "url")
         .select(col("canonical_id").cast("string").as("url"))
       // kept is consumed by FOUR downstream branches (dupWindowStats'
       // count + key passes, the cull join's left side, and sourceQuota's
       // two passes over clean); without a persist each one re-runs the
       // exact-dedup md5 aggregate + semi-join over the full text corpus.
-      // Registered as builder-owned so Bench/long sessions release it.
-      val kept = owned(ex.join(canon, Seq("url"), "left_semi")
+      // The harness releases both persists with spark.catalog.clearCache().
+      val kept = ex.join(canon, Seq("url"), "left_semi")
         .withColumn("host", regexp_extract(col("url"), "^[a-z]+://([^/]+)", 1))
         .withColumn("uid", xxhash64(col("url")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // native xx64 window keys, not md5 gram strings: this stage never
       // meets the DuckDB oracle (d27 does, with the md5 default), and long
       // keys make the gram-keyed exchange ~4x lighter at identical cull
       // decisions.
-      val dw = owned(Dedup.dupWindowStats(kept, n = 8,
-        textCol = "text", idCol = "uid", oracleKeys = false))
+      val dw = Dedup.dupWindowStats(kept, n = 8,
+        textCol = "text", idCol = "uid", oracleKeys = false)
       val clean = kept.join(
         dw.filter(col("dup_pct") < 75).select(col("doc_id").as("uid")),
         Seq("uid"), "left_semi")
@@ -1348,8 +1313,9 @@ object SparkEntry {
         |  CAST((len(l) - len(k)) * 2 <= len(l) AS INTEGER) AS doc_kept,
         |  array_to_string(k, chr(10)) AS fixed_text
         |FROM fx ORDER BY doc_id""".stripMargin,
-    // Planted-truth reconstruction: media ids are 0..2n-1 (n = documents
-    // rows, doc_id dense 0..n-1), every header field the same integer
+    // Planted-truth reconstruction: media ids are doc_id*2 and doc_id*2+1
+    // per documents row (the engine derives them the same way), every
+    // header field the same integer
     // arithmetic the witness builder packed into the container bytes, and
     // the fixed 64-byte body pins total sizes per format.
     "m03_media_witness" ->

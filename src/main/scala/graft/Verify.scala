@@ -37,7 +37,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally SparkEntry.releaseOwnedCaches() // result is on disk already
+      } finally spark.catalog.clearCache() // result is on disk already
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

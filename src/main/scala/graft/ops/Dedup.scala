@@ -308,8 +308,7 @@ object Dedup {
           TextOps.asciiTokens(col("__txt")), n)).as("gkey"))
     val singletons = keyed
       .groupBy(col("gkey"))
-      // deterministic despite first(): count==1 groups hold exactly one row
-      .agg(count(lit(1)).as("__c"), first(col("doc_id")).as("doc_id"))
+      .agg(count(lit(1)).as("__c"), min(col("doc_id")).as("doc_id"))
       .filter(col("__c") === 1)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("__n_singleton"))
     // NULL-SAFE doc join (<=>): ids that are null or fail the long cast

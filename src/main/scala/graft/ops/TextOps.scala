@@ -135,12 +135,6 @@ object TextOps {
       col("doc_id").cast("long").as("doc_id"),
       graft.functions.TextFunctions.canonUrl(url).as("url_canon"))
 
-  /** Column-expression language ID — the same script-range/stopword heuristic
-    * as [[langId]] but as integer-exact codegen'd Catalyst expressions, so a
-    * third-party SQL engine can reproduce the decision bit-for-bit (every
-    * count is an integer; the language string is a pure CASE over them).
-    * Examines the first 4000 characters like the row kernel. Returns
-    * (doc_id, n_latin, n_cjk, detected_lang). */
   /** Production/bench twin of [[langIdDF]]: the same
     * (doc_id, n_latin, n_cjk, detected_lang) output from ONE native
     * codegen'd scan (`graft_lang_id`) instead of ~12 interpreted regex
@@ -157,6 +151,12 @@ object TextOps {
       coalesce(f.getField("lang"), lit("und")).as("detected_lang"))
   }
 
+  /** Column-expression language ID — the same script-range/stopword heuristic
+    * as [[langId]] but as integer-exact codegen'd Catalyst expressions, so a
+    * third-party SQL engine can reproduce the decision bit-for-bit (every
+    * count is an integer; the language string is a pure CASE over them).
+    * Examines the first 4000 characters like the row kernel. Returns
+    * (doc_id, n_latin, n_cjk, detected_lang). */
   def langIdDF(df: DataFrame, text: Column): DataFrame = {
     val s = substring(text, 1, 4000)
     def cnt(c: Column, pattern: String): Column =
